@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from profitscout_engine_spark.plans import explain_str
+from profitscout_engine_spark.plans import CAPTURE_SHUFFLE_PARTITIONS, explain_str
 from profitscout_engine_spark.queries import load_registry
 from profitscout_engine_spark.queries._util import reset_shared
 from profitscout_engine_spark.session import get_spark
@@ -30,7 +30,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="plans-r12")
+    spark = get_spark(app_name="plans-r12", shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
     reg = load_registry()
     for name in names:
         reset_shared()

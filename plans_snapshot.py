@@ -36,6 +36,7 @@ CHUNK = 32
 
 def worker(names: list[str], out_path: str) -> None:
     from profitscout_engine_spark.plans import (
+        CAPTURE_SHUFFLE_PARTITIONS,
         explain_str,
         normalized_plan_sha,
         plan_flags,
@@ -45,7 +46,7 @@ def worker(names: list[str], out_path: str) -> None:
 
     from profitscout_engine_spark.queries._util import reset_shared
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark(master="local[8]", shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
     reg = load_registry()
     flags: dict[str, dict] = {}
     skipped: dict[str, str] = {}

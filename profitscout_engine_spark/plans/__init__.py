@@ -16,6 +16,13 @@ import threading
 
 from pyspark.sql import DataFrame
 
+# Shuffle partitions every plan capture pins (plans_snapshot.py, plans_r11.py,
+# plans_r12.py). Captured plan text embeds the count — hashpartitioning(…, N)
+# — so PLANS.json plan shas, and the DRIVER_STATE hashes built on them, are
+# only comparable across captures taken at one fixed N, whatever the
+# capturing session's task-slot default is.
+CAPTURE_SHUFFLE_PARTITIONS = 32
+
 # Capture calls mutate the session-global maxPlanStringLength; concurrent
 # captures (or an action racing a capture) could interleave save/restore and
 # strand the cap at 2^31-16, silently re-enabling full per-action plan

@@ -1484,17 +1484,18 @@ def lr_gradient_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _nb_oracle() -> str:
     bucket = _lr_bucket_sql("strpos", "term")
     return f"""
-    WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+    WITH labeled AS (SELECT * FROM documents WHERE lang IS NOT NULL),
+    tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM labeled),
     db AS (
         SELECT doc_id, {bucket} AS bucket, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM tk GROUP BY 1, 2
     ),
-    cls AS (SELECT lang AS c, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY 1),
+    cls AS (SELECT lang AS c, CAST(COUNT(*) AS BIGINT) AS n_docs FROM labeled GROUP BY 1),
     tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total,
                    CAST(COUNT(*) AS BIGINT) AS n_cls FROM cls),
     cb AS (
         SELECT d.lang AS c, db.bucket, CAST(SUM(db.cnt) AS BIGINT) AS cnt
-        FROM db JOIN documents d ON d.doc_id = db.doc_id
+        FROM db JOIN labeled d ON d.doc_id = db.doc_id
         GROUP BY 1, 2
     ),
     ctot AS (SELECT c, CAST(SUM(cnt) AS BIGINT) AS ctokens FROM cb GROUP BY 1),
@@ -1520,7 +1521,7 @@ def _nb_oracle() -> str:
         WHERE rn = 1
     )
     SELECT d.lang AS lang_true, p.lang_pred, CAST(COUNT(*) AS BIGINT) AS n
-    FROM pred p JOIN documents d ON d.doc_id = p.doc_id
+    FROM pred p JOIN labeled d ON d.doc_id = p.doc_id
     GROUP BY 1, 2
     """
 
@@ -1543,11 +1544,16 @@ def nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r10/r11 shape fanned every doc-bucket row out ×n_classes through
     the scoring aggregation. Class names are a bounded, data-derived
     literal list (the k-means-centroid / percentile-literal pattern:
-    collect the BOUNDED model axis, never data)."""
+    collect the BOUNDED model axis, never data).
+
+    NULL-lang contract: a document without a label is neither training
+    data nor evaluable, so NB trains and evaluates on labeled documents
+    only (the oracle mirrors it with its ``labeled`` CTE). A corpus with
+    no labeled document has no classes and yields the empty matrix."""
     from ._util import shared_value
 
     db = _lr_db(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
+    docs = _docs(spark, sf_dir).select("doc_id", "lang").where(F.col("lang").isNotNull())
     # bounded collect: the class axis (distinct langs) — same driver-state
     # justification as the 64x64 Gram table / percentile literal maps;
     # session-memoized so re-invocations don't re-run the tiny collect job.
@@ -1555,12 +1561,14 @@ def nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "nb_class_axis",
-        lambda: sorted(
-            r[0]
-            for r in docs.select("lang").distinct().collect()
-            if r[0] is not None
-        ),
+        lambda: sorted(r[0] for r in docs.select("lang").distinct().collect()),
     )
+    if not langs:
+        return docs.select(
+            F.col("lang").alias("lang_true"),
+            F.col("lang").alias("lang_pred"),
+            F.lit(0).cast("long").alias("n"),
+        ).where(F.lit(False))
     cls = docs.groupBy(F.col("lang").alias("c")).agg(
         F.count("*").cast("long").alias("n_docs")
     )
@@ -1596,8 +1604,9 @@ def nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5)
     ).cast("long")
     # per-bucket log-likelihood VECTOR, one column per class (≤256 rows):
-    # every db bucket was contributed by a doc of SOME class, so it appears
-    # here; classes missing the bucket stay NULL and fall back to unseen_k.
+    # every bucket of a labeled doc appears here, so the inner join below
+    # drops only rows of unlabeled docs, which the final join drops too;
+    # classes missing the bucket stay NULL and fall back to unseen_k.
     ll_piv = (
         cb.join(ctot, "c")
         .groupBy("bucket")

@@ -2918,6 +2918,15 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import drain, stream_documents_ordered
 
+    # The shard width is part of the stream's STATE LAYOUT, so a bad value
+    # raises instead of being clamped: clamping would silently re-key the
+    # applyInPandasWithState groups of an existing checkpointed stream.
+    hex_width = _os.environ.get("PSE_STREAM_BUCKET_HEX", "2")
+    if hex_width not in tuple("12345678"):
+        raise ValueError(
+            f"PSE_STREAM_BUCKET_HEX must be an integer in 1..8, got {hex_width!r}"
+        )
+
     docs = stream_documents_ordered(spark, sf_dir, n_files=DEDUP_STREAM_FILES)
     # Each ingest slice is ONE file -> one input partition per micro-batch;
     # without a repartition the per-row MinHash (16 array folds of md5s)
@@ -2967,17 +2976,12 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 13.0 s vs 22.9 s fresh-stream isolate best-of-3 — so the r10
         # 2-hex sharding stays; state (de)serialization bytes, not group
         # call count, dominate this stream's per-batch cost.
-        # Validated to 1..8 (ADVICE r11): 0/empty would collapse every
-        # signature into ONE state group with an unbounded sig→min map, a
-        # non-integer would raise at plan build. NOTE the width is part of
-        # the stream's STATE LAYOUT — it must stay fixed for the lifetime
-        # of a checkpointed stream (changing it across restarts re-shards
-        # applyInPandasWithState keys and orphans the existing dedup state).
-        F.substring(
-            F.col("b.band_sig"),
-            1,
-            min(8, max(1, int(_os.environ.get("PSE_STREAM_BUCKET_HEX", "2") or "2"))),
-        ).alias("bucket"),
+        # Validated to 1..8 above: 0/empty would collapse every signature
+        # into ONE state group with an unbounded sig→min map. The width
+        # must stay fixed for the lifetime of a checkpointed stream
+        # (changing it across restarts re-shards applyInPandasWithState
+        # keys and orphans the existing dedup state).
+        F.substring(F.col("b.band_sig"), 1, int(hex_width)).alias("bucket"),
     )
 
     def update(

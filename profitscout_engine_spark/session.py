@@ -3,8 +3,10 @@
 Defaults are chosen for correctness-vs-oracle first (UTC session timezone so
 parquet timestamps compare bit-identically with DuckDB's naive reads) and for
 scale second: AQE on (runtime coalescing, skew-join splitting), Arrow enabled
-for the pandas-UDF kernels, and a shuffle-partition default sized for local
-runs that a cluster deployment would override via ``spark.sql.shuffle.partitions``.
+for the pandas-UDF kernels, and a shuffle-partition default equal to the
+session's task slots (``sparkContext.defaultParallelism``), which a caller
+overrides with ``shuffle_partitions=``, ``SPARK_GRAFT_SHUFFLE`` or a
+``spark.sql.shuffle.partitions`` in ``SPARK_GRAFT_EXTRA_CONFS``.
 """
 
 from __future__ import annotations
@@ -12,6 +14,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+SHUFFLE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
+
+
+def positive_int(name: str, raw: str) -> int:
+    """``raw`` parsed as a positive integer; ValueError naming ``name`` if not.
+
+    The slot and shuffle knobs are checked here, before a JVM starts: a bad
+    ``SPARK_GRAFT_CPUS`` otherwise surfaces as an opaque master-URL error from
+    the JVM, and a zero ``SPARK_GRAFT_SHUFFLE`` is handed to Spark as is."""
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
+
+def _env_int(name: str) -> int | None:
+    raw = os.environ.get(name)
+    return None if raw is None else positive_int(name, raw)
 
 
 def get_spark(
@@ -22,31 +47,36 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) when
-    no active session exists. On a real cluster the caller's session wins:
-    if a session is already active we return it untouched except for
-    session-scoped confs (timezone, AQE) that are safe to set at runtime.
+    no active session exists. ``spark.sql.shuffle.partitions`` is, in order of
+    precedence: ``SPARK_GRAFT_EXTRA_CONFS``, ``shuffle_partitions``,
+    ``SPARK_GRAFT_SHUFFLE``, else the started session's task slots
+    (``sparkContext.defaultParallelism``) — the figure every explicit
+    ``repartition`` in the engine already uses, so a 4-slot box does not run
+    each shuffle stage as 8 waves of near-empty tasks. On a real cluster the
+    caller's session wins: if a session is already active we return it
+    untouched except for session-scoped confs (timezone, AQE) that are safe
+    to set at runtime.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
         _apply_runtime_confs(active)
         return active
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    cpus = _env_int("SPARK_GRAFT_CPUS") or 32
+    if shuffle_partitions is None:
+        shuffle_partitions = _env_int("SPARK_GRAFT_SHUFFLE")
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+    confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+    }
+    if shuffle_partitions is not None:
+        confs[SHUFFLE_PARTITIONS_CONF] = str(shuffle_partitions)
     # A/B experiment hook (round-11 optimization): semicolon-separated
     # key=value pairs applied LAST, so a measurement run can flip one conf
     # without editing source. Production-default confs chosen from those
@@ -54,8 +84,14 @@ def get_spark(
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";"):
         if "=" in kv:
             k, _, v = kv.partition("=")
-            builder = builder.config(k.strip(), v.strip())
+            confs[k.strip()] = v.strip()
+
+    builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
+    for k, v in confs.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if SHUFFLE_PARTITIONS_CONF not in confs:
+        spark.conf.set(SHUFFLE_PARTITIONS_CONF, str(spark.sparkContext.defaultParallelism))
     _apply_runtime_confs(spark)
     return spark
 

@@ -308,7 +308,7 @@ def main() -> int:
         return 2
     print(f"building {k}x replica of {BASE} ...", flush=True)
     big = build_replica(k)
-    spark = get_spark(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = get_spark()
     if check:
         return check_correctness(spark, reg, names, big, k)
     results = {}

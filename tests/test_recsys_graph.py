@@ -199,6 +199,30 @@ def test_nb_confusion_is_a_complete_confusion_matrix(spark, sf_dir):
     assert correct / len(docs) >= truth.max() / len(docs)
 
 
+def test_nb_confusion_drops_null_lang_docs_like_its_oracle(spark, sf_dir, tmp_path):
+    """NULL-lang documents are unlabeled: NB neither trains on nor scores
+    them, on both engines, so the matrix covers exactly the labeled docs."""
+    import duckdb
+
+    from profitscout_engine_spark.queries import load_registry
+    from tests.conftest import assert_frames_match
+
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * REPLACE (CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang) "
+        f"FROM '{sf_dir}/documents.parquet') TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"
+    )
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    n_null = con.sql("SELECT count(*) FROM documents WHERE lang IS NULL").fetchone()[0]
+    assert n_null > 0
+    spec = load_registry()["nb_confusion"]
+    got = spec.fn(spark, str(tmp_path)).toPandas()
+    assert got.lang_true.notna().all()
+    n_docs = con.sql("SELECT count(*) FROM documents").fetchone()[0]
+    assert got.n.sum() == n_docs - n_null
+    assert_frames_match(got, con.sql(spec.oracle).df(), "nb_confusion")
+
+
 def test_pr_curve_binned_monotone_recall(spark, sf_dir):
     from profitscout_engine_spark.queries.curation import pr_curve_binned
 
