@@ -1,7 +1,7 @@
-"""Capture .explain("formatted") for named queries into plans/r11/<q>_<tag>.txt.
+"""Capture .explain("formatted") for named queries into plans/rROUND/<q>_<tag>.txt.
 
-Usage:  python plans_r11.py before q1 q2 ...
-        python plans_r11.py after  q1 q2 ...
+Usage:  python plans_capture.py ROUND before q1 q2 ...
+        python plans_capture.py ROUND after  q1 q2 ...
 
 Runs at the bench's scale factor (SPARK_GRAFT_SF_DIR, default sf0.1) in a
 fresh process with the shared-frame cache reset before EACH query, so the
@@ -24,13 +24,13 @@ from profitscout_engine_spark.session import get_spark
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    assert tag in ("before", "after"), tag
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    rnd, tag, names = int(sys.argv[1]), sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r11")
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="plans-r11", shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
+    spark = get_spark(app_name=f"plans-r{rnd}", shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
     reg = load_registry()
     for name in names:
         reset_shared()

@@ -110,8 +110,8 @@ def main() -> None:
         run_chunks(names, CHUNK, "chunk")
         # Retry pass: a mid-chunk SparkContext death (OOM) poisons every
         # later capture in that worker ("stopped SparkContext") — re-run the
-        # casualties in small fresh-JVM chunks so one heavy query costs at
-        # most its own flag, not 13 neighbors'.
+        # casualties one per fresh JVM, so one heavy query costs at most its
+        # own flag, not its neighbours'.
         # Only chunk-level casualties are worth a fresh JVM: a query whose
         # OWN capture failed (worker recorded a real per-query reason) will
         # fail again and burn a chunk slot each.
@@ -123,10 +123,10 @@ def main() -> None:
         retry = [n for n in names if n not in flags
                  and (n not in skipped or _chunk_casualty(skipped[n]))]
         if retry:
-            print(f"retrying {len(retry)} skipped in chunks of 8", flush=True)
+            print(f"retrying {len(retry)} skipped, one per worker", flush=True)
             for n in retry:
                 skipped.pop(n, None)
-            run_chunks(retry, 8, "retry")
+            run_chunks(retry, 1, "retry")
             for n in retry:
                 if n not in flags:
                     skipped.setdefault(n, "failed after retry")

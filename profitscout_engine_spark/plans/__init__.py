@@ -16,8 +16,8 @@ import threading
 
 from pyspark.sql import DataFrame
 
-# Shuffle partitions every plan capture pins (plans_snapshot.py, plans_r11.py,
-# plans_r12.py). Captured plan text embeds the count — hashpartitioning(…, N)
+# Shuffle partitions every plan capture pins (plans_snapshot.py,
+# plans_capture.py). Captured plan text embeds the count — hashpartitioning(…, N)
 # — so PLANS.json plan shas, and the DRIVER_STATE hashes built on them, are
 # only comparable across captures taken at one fixed N, whatever the
 # capturing session's task-slot default is.
@@ -94,6 +94,12 @@ def normalized_plan_sha(plan: str) -> str:
     # queries planned first — pure session-order noise (bit round 8: 11
     # phantom stale-green flags after a re-chunked snapshot run)
     s = re.sub(r"RDD\[\d+\]", "RDD[_]", s)
+    # …and the RDD's creation call site is JVM-state noise: the same scan
+    # renders "RDD[_] at localCheckpoint at NativeMethodAccessorImpl.java:0"
+    # in a fresh JVM and "… at <unknown>:0" once reflection inflation has
+    # swapped the native accessor for a generated one (graph_modularity
+    # captured 13th in one worker). Keep the operation, drop the site.
+    s = re.sub(r"(RDD\[_\] at \w+) at [^\s,\]]+:\d+", r"\1", s)
     # Round-11 noise class: CollapseProject's common-subexpression aliases
     # (_common_expr_N) draw N from a session-global counter just like
     # exprIds — the same plan renders _common_expr_0 in a fresh session and

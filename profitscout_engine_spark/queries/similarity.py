@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..exprs import r4, r6, stable_round
 from ..operators import text as tx
 from ..operators import similarity as sim
+from ..operators.graph import lpa_round, symmetric_edges
 from . import query
 from ._util import fan_out, shared, t
 
@@ -85,10 +86,7 @@ def _mh_edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change); both PageRank queries read this one cached frame."""
 
     def build() -> DataFrame:
-        pairs = _mh_pairs(spark, sf_dir)
-        edges = pairs.select(
-            F.col("d1").alias("src"), F.col("d2").alias("dst")
-        ).unionAll(pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst")))
+        edges = symmetric_edges(_mh_pairs(spark, sf_dir))
         deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
         return edges.join(deg, "src")
 
@@ -2826,16 +2824,11 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled relational plan is exactly engine-portable; per-round cost
     is one degree aggregation + two semi-join-shaped hash joins over an
     edge list that only shrinks."""
-    pairs = _mh_pairs(spark, sf_dir)
     # coalesce: the symmetric union of the cached 32-partition pair frame
     # would push ~1k-row edge lists through 64-task shuffle rounds — the
     # peel loop is scheduling-bound, not data-bound (same rule as the
     # dendrogram sweep).
-    ed = (
-        pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-        .unionAll(pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst")))
-        .coalesce(8)
-    )
+    ed = symmetric_edges(_mh_pairs(spark, sf_dir)).coalesce(8)
     deg0 = ed.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg"))
     survs = []
     cur = ed
@@ -5561,6 +5554,32 @@ def gram_topk_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ROUNDS = 3
 
 
+def _lpa_round_ctes(p: int, q: int, edges: str, frontier: str | None = None) -> str:
+    """Oracle twin of ``operators.graph.lpa_round``: CTEs c{q} (neighbor
+    label counts of l{p} over the symmetric ``edges`` CTE, restricted to
+    ``frontier`` sources when given), b{q} (argmax count, min-label
+    tie-break) and l{q} (l{p} with b{q} patched in; others keep l{p})."""
+    fjoin = f"\n        JOIN {frontier} f ON f.doc_id = e.src" if frontier else ""
+    return f"""
+    c{q} AS (
+        SELECT e.src AS doc_id, n.lbl, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM {edges} e JOIN l{p} n ON n.doc_id = e.dst{fjoin}
+        GROUP BY 1, 2
+    ),
+    b{q} AS (
+        SELECT doc_id, lbl FROM (
+            SELECT doc_id, lbl,
+                   ROW_NUMBER() OVER (PARTITION BY doc_id
+                                      ORDER BY cnt DESC, lbl ASC) AS rn
+            FROM c{q}) z
+        WHERE rn = 1
+    ),
+    l{q} AS (
+        SELECT l.doc_id, COALESCE(b.lbl, l.lbl) AS lbl
+        FROM l{p} l LEFT JOIN b{q} b ON b.doc_id = l.doc_id
+    )"""
+
+
 def _label_prop_oracle() -> str:
     """Unrolled synchronous LPA rounds. All-integer: labels are doc_ids,
     neighbor-label counts are exact BIGINTs, the update rule is
@@ -5582,25 +5601,7 @@ def _label_prop_oracle() -> str:
     ),
     l0 AS (SELECT doc_id, doc_id AS lbl FROM documents)"""]
     for it in range(1, LPA_ROUNDS + 1):
-        p, q = it - 1, it
-        parts.append(f"""
-    c{q} AS (
-        SELECT e.src AS doc_id, n.lbl, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM edges e JOIN l{p} n ON n.doc_id = e.dst
-        GROUP BY 1, 2
-    ),
-    b{q} AS (
-        SELECT doc_id, lbl FROM (
-            SELECT doc_id, lbl,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id
-                                      ORDER BY cnt DESC, lbl ASC) AS rn
-            FROM c{q}) z
-        WHERE rn = 1
-    ),
-    l{q} AS (
-        SELECT l.doc_id, COALESCE(b.lbl, l.lbl) AS lbl
-        FROM l{p} l LEFT JOIN b{q} b ON b.doc_id = l.doc_id
-    )""")
+        parts.append(_lpa_round_ctes(it - 1, it, "edges"))
     sql = (
         "WITH RECURSIVE " + ",".join(parts)
         + f"\n    SELECT doc_id, lbl AS community FROM l{LPA_ROUNDS}"
@@ -5625,13 +5626,9 @@ def label_propagation_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax-count neighbor label with a MIN-label tie-break — a fully
     deterministic synchronous update, which is precisely what makes LPA
     oracle-checkable (the classic async/randomized variant is not).
-    Isolated nodes keep their own label via the left join.
-
-    Scale shape per round: one equi-join of the (cached, shared)
-    symmetric edge list against the current label table, one
-    (node, label) count aggregation, one min-struct argmax per node
-    (map-side partial agg, no window), one left join back to the node
-    spine — edge-linear, nothing quadratic, no driver state at all.
+    Isolated nodes keep their own label via the left join. Each round
+    is the shared ``operators.graph.lpa_round`` kernel (scale shape
+    there).
 
     r11 optimization: the converged label table is published as the
     session-shared ``lpa_communities`` frame (the SAME key
@@ -5640,44 +5637,16 @@ def label_propagation_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized-view pattern every other derived corpus frame uses."""
 
     def build() -> DataFrame:
-        pairs = _mh_pairs(spark, sf_dir)
-        edges = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).unionAll(
-            pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
-        )
+        edges = symmetric_edges(_mh_pairs(spark, sf_dir))
         labels = _docs(spark, sf_dir).select("doc_id", F.col("doc_id").alias("lbl"))
         for _ in range(LPA_ROUNDS):
-            counts = (
-                edges.join(
-                    labels.select(F.col("doc_id").alias("dst"), F.col("lbl").alias("nlbl")),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("doc_id"), F.col("nlbl").alias("lbl"))
-                .agg(F.count("*").cast("long").alias("cnt"))
-            )
-            best = (
-                counts.select(
-                    "doc_id", F.struct((-F.col("cnt")).alias("nc"), "lbl").alias("s")
-                )
-                .groupBy("doc_id")
-                .agg(F.min("s").alias("s"))
-                .select("doc_id", F.col("s.lbl").alias("blbl"))
-            )
-            labels = (
-                labels.join(best, "doc_id", "left")
-                .select("doc_id", F.coalesce("blbl", "lbl").alias("lbl"))
-            )
+            labels = lpa_round(edges, labels)
         # localCheckpoint (r11): without it the {LPA_ROUNDS}-round nest rides
         # inside every consumer's tree AND inside the InMemoryRelation child
         # that each action re-renders for the SQL-listener event (the
         # plan-string finding) — community_top_terms alone re-planned a
         # 4.9k-line tree per execution. Same deterministic rows,
-        # materialized once. CLUSTER CAVEAT (ADVICE r11): localCheckpoint
-        # stores blocks in non-replicated executor storage — safe on
-        # local[*] (the tested config); on a real cluster with executor
-        # loss / dynamic-allocation decommission, use reliable
-        # checkpoint() (with a checkpoint dir) or persist(DISK_ONLY_2) so
-        # a mid-session executor loss cannot strand every downstream
-        # consumer of the cached LPA frame.
+        # materialized once (CLUSTER CAVEAT: operators/graph.py).
         return labels.select(
             "doc_id", F.col("lbl").alias("community")
         ).localCheckpoint()
@@ -5717,25 +5686,7 @@ def _incremental_lpa_oracle() -> str:
     ),
     l0 AS (SELECT doc_id, doc_id AS lbl FROM documents)"""]
     for it in range(1, base + 1):
-        p, q = it - 1, it
-        parts.append(f"""
-    c{q} AS (
-        SELECT e.src AS doc_id, n.lbl, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM old_edges e JOIN l{p} n ON n.doc_id = e.dst
-        GROUP BY 1, 2
-    ),
-    b{q} AS (
-        SELECT doc_id, lbl FROM (
-            SELECT doc_id, lbl,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id
-                                      ORDER BY cnt DESC, lbl ASC) AS rn
-            FROM c{q}) z
-        WHERE rn = 1
-    ),
-    l{q} AS (
-        SELECT l.doc_id, COALESCE(b.lbl, l.lbl) AS lbl
-        FROM l{p} l LEFT JOIN b{q} b ON b.doc_id = l.doc_id
-    )""")
+        parts.append(_lpa_round_ctes(it - 1, it, "old_edges"))
     # frontier 0 = delta-edge endpoints; each later frontier adds one hop
     parts.append("""
     f0 AS (
@@ -5751,27 +5702,9 @@ def _incremental_lpa_oracle() -> str:
         SELECT e.src AS doc_id FROM all_edges e JOIN f{h - 1} f ON f.doc_id = e.dst
     )""")
     for it in range(1, inc + 1):
-        p, q = base + it - 1, base + it
-        parts.append(f"""
-    c{q} AS (
-        SELECT e.src AS doc_id, n.lbl, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM all_edges e
-        JOIN l{p} n ON n.doc_id = e.dst
-        JOIN f{it - 1} f ON f.doc_id = e.src
-        GROUP BY 1, 2
-    ),
-    b{q} AS (
-        SELECT doc_id, lbl FROM (
-            SELECT doc_id, lbl,
-                   ROW_NUMBER() OVER (PARTITION BY doc_id
-                                      ORDER BY cnt DESC, lbl ASC) AS rn
-            FROM c{q}) z
-        WHERE rn = 1
-    ),
-    l{q} AS (
-        SELECT l.doc_id, COALESCE(b.lbl, l.lbl) AS lbl
-        FROM l{p} l LEFT JOIN b{q} b ON b.doc_id = l.doc_id
-    )""")
+        parts.append(
+            _lpa_round_ctes(base + it - 1, base + it, "all_edges", f"f{it - 1}")
+        )
     sql = (
         "WITH " + ",".join(parts) + f"""
     SELECT lb.doc_id, lf.lbl AS community, lf.lbl <> lb.lbl AS changed
@@ -5806,10 +5739,8 @@ def incremental_lpa_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental-LPA shape and what keeps the trajectory deterministic and
     oracle-checkable. Output flags which nodes actually moved.
 
-    Scale shape: per round one equi-join of the shared symmetric edge
-    list against the label table, one (node, label) count aggregation,
-    one min-struct argmax (map-side partials, no window), one left join
-    back; the frontier restriction makes incremental rounds proportional
+    Scale shape: each round is ``operators.graph.lpa_round``; its
+    frontier restriction makes incremental rounds proportional
     to the DELTA's neighborhood, not the graph — the whole point of an
     incremental refresh at 100 TB."""
     tagged = shared(
@@ -5829,58 +5760,12 @@ def incremental_lpa_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def sym(pairs: DataFrame) -> DataFrame:
-        return pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).unionAll(
-            pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
-        )
-
-    old_edges = sym(tagged.where(~F.col("is_new")))
-    all_edges = sym(tagged)
-
-    def lpa_round(edges: DataFrame, labels: DataFrame, frontier: DataFrame | None) -> DataFrame:
-        if frontier is not None:
-            # Restrict the EDGE SET to frontier sources BEFORE resolving
-            # neighbor labels (inner joins commute, so the trajectory is
-            # unchanged): the label join then sees only the delta
-            # neighborhood's edges, not the whole graph — at 100 TB this is
-            # the difference between a delta-proportional round and an
-            # edge-proportional one. The frontier is BROADCAST as a left-semi
-            # filter: it is delta-proportional by construction (the whole
-            # premise of an incremental refresh is that the delta's
-            # neighborhood fits comfortably beside an executor), so the
-            # cached edge list is filtered map-side with NO shuffle.
-            edges = edges.join(
-                F.broadcast(frontier.select(F.col("doc_id").alias("src"))),
-                "src",
-                "leftsemi",
-            )
-        counted = edges.join(
-            labels.select(F.col("doc_id").alias("dst"), F.col("lbl").alias("nlbl")),
-            "dst",
-        )
-        counts = counted.groupBy(F.col("src").alias("doc_id"), F.col("nlbl").alias("lbl")).agg(
-            F.count("*").cast("long").alias("cnt")
-        )
-        best = (
-            counts.select(
-                "doc_id", F.struct((-F.col("cnt")).alias("nc"), "lbl").alias("s")
-            )
-            .groupBy("doc_id")
-            .agg(F.min("s").alias("s"))
-            .select("doc_id", F.col("s.lbl").alias("blbl"))
-        )
-        if frontier is not None:
-            # best carries at most one row per FRONTIER node — broadcast the
-            # delta-proportional update side so the corpus-wide label table
-            # is patched map-side instead of shuffling it every round.
-            best = F.broadcast(best)
-        return labels.join(best, "doc_id", "left").select(
-            "doc_id", F.coalesce("blbl", "lbl").alias("lbl")
-        )
+    old_edges = symmetric_edges(tagged.where(~F.col("is_new")))
+    all_edges = symmetric_edges(tagged)
 
     labels = _docs(spark, sf_dir).select("doc_id", F.col("doc_id").alias("lbl"))
     for _ in range(LPA_ROUNDS):
-        labels = lpa_round(old_edges, labels, None)
+        labels = lpa_round(old_edges, labels)
     # the converged OLD-graph labels feed every incremental round AND the
     # final changed-flag join — share the subtree once per session.
     # localCheckpoint (r11): the {LPA_ROUNDS}-round nest otherwise rides
@@ -5890,11 +5775,7 @@ def incremental_lpa_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # what turned the cached-everything re-execution from ~4 s of driver
     # plan-rendering into real work only (same rows: the checkpoint
     # materializes the identical deterministic computation once).
-    # CLUSTER CAVEAT (ADVICE r11): localCheckpoint blocks are
-    # non-replicated executor-local storage — fine on local[*]; deployments
-    # with executor churn should use reliable checkpoint() or
-    # persist(DISK_ONLY_2) here, or an executor loss mid-session strands
-    # every consumer of the cached base labels.
+    # CLUSTER CAVEAT: operators/graph.py.
     base = shared(spark, sf_dir, "inc_lpa_base", lambda: labels.localCheckpoint())
     frontier = (
         tagged.where(F.col("is_new"))

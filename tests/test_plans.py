@@ -311,3 +311,26 @@ def test_unpartitioned_windows_are_allowlisted():
         if flags.get("unpartitioned_windows", 0) and name not in _UNPART_WINDOW_OK
     )
     assert not bad, f"undocumented unpartitioned windows in: {bad}"
+
+
+def test_plan_sha_ignores_rdd_call_site():
+    """The creation call site of an existing-RDD scan depends on JVM state
+    (the reflection accessor in use), not on the plan: both renderings of
+    one localCheckpoint scan hash equal, while a different RDD operation
+    still changes the hash."""
+    from profitscout_engine_spark.plans import normalized_plan_sha
+
+    def scan(site: str) -> str:
+        return (
+            "(1) Scan ExistingRDD [codegen id : 1]\n"
+            f"Arguments: [node#12L, comp#13L], MapPartitionsRDD[42] at {site}, "
+            "ExistingRDD, UnknownPartitioning(0)\n"
+        )
+
+    fresh = normalized_plan_sha(scan("localCheckpoint at NativeMethodAccessorImpl.java:0"))
+    inflated = normalized_plan_sha(scan("localCheckpoint at <unknown>:0"))
+    other_op = normalized_plan_sha(
+        scan("applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0")
+    )
+    assert fresh == inflated
+    assert other_op != fresh

@@ -250,6 +250,28 @@ def test_connected_components_chain_and_forest(spark):
         connected_components(edges, max_iters=1)
 
 
+def test_lpa_round_argmax_tiebreak_isolated_and_frontier(spark):
+    """One synchronous LPA round on a hand-built graph: node 1 sees labels
+    {7, 7, 5} and adopts 7 (count beats the smaller label); node 4 sees
+    {1, 5} once each and takes the min, 1; isolated node 6 keeps its
+    label; with a frontier only frontier nodes move."""
+    from profitscout_engine_spark.operators.graph import lpa_round, symmetric_edges
+
+    edges = symmetric_edges(
+        spark.createDataFrame([(1, 2), (1, 3), (1, 4), (4, 5)], "d1 long, d2 long")
+    )
+    labels = spark.createDataFrame(
+        [(1, 1), (2, 7), (3, 7), (4, 5), (5, 5), (6, 6)], "doc_id long, lbl long"
+    )
+
+    def step(frontier=None):
+        return {r.doc_id: r.lbl for r in lpa_round(edges, labels, frontier).collect()}
+
+    assert step() == {1: 7, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6}
+    frontier = spark.createDataFrame([(1,), (4,)], "doc_id long")
+    assert step(frontier) == {1: 7, 2: 7, 3: 7, 4: 1, 5: 5, 6: 6}
+
+
 def test_bpe_maximal_munch_on_adversarial_words(spark):
     """The Column-fold automaton equals the Python reference on generated
     adversarial inputs: overlapping vocab prefixes, repeated merge
