@@ -87,25 +87,12 @@ def main() -> None:
         total += dt
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Additions-only metrics (VERDICT r11 items 4+8; per-query timing path
-    # unchanged):
-    #  - slowest_decile_total: subtotal of the slowest ceil(n/10) queries —
-    #    the round-over-round signal at sf0.1, where the long tail is
-    #    per-query fixed overhead and raw per-query deltas are noise.
-    #  - shared_builds: wall seconds each session-shared frame's BUILDER
-    #    took at first materialization (eager builders — CC loops,
-    #    checkpoints, bounded collects — charge real cost; lazy builders
-    #    read ~0 because their first consumer's timed run pays the
-    #    materialization, exactly as before).
-    from profitscout_engine_spark.queries._util import SHARED_BUILD_SECONDS
-
+    # slowest_decile_total: subtotal of the slowest ceil(n/10) queries —
+    # the round-over-round signal at sf0.1, where the long tail is
+    # per-query fixed overhead and raw per-query deltas are noise.
     dec_n = (len(timings) + 9) // 10
     decile = sorted(timings.values(), reverse=True)[:dec_n]
     slowest_decile_total = round(sum(decile), 3)
-    shared_builds = dict(sorted(SHARED_BUILD_SECONDS.items()))
-    shared_builds_total = round(sum(shared_builds.values()), 3)
-    for k, v in shared_builds.items():
-        print(f"shared-build {k}: {v}s", file=sys.stderr)
     # Full per-query detail for the judge / round-over-round diffing.
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
@@ -132,8 +119,6 @@ def main() -> None:
                 "queries": timings,
                 "slowest_decile_n": dec_n,
                 "slowest_decile_total": slowest_decile_total,
-                "shared_builds": shared_builds,
-                "shared_builds_total": shared_builds_total,
             },
             f,
             indent=1,
@@ -156,7 +141,6 @@ def main() -> None:
         "n_queries": len(timings),
         "detail": "BENCH_FULL.json",
         "slowest_decile_total": slowest_decile_total,
-        "shared_builds_total": shared_builds_total,
         # Provenance travels in the PARSED line too (VERDICT r9 item 3), so
         # BENCH_r{N}.json itself says whether round-over-round comparison is
         # trustworthy: unlabeled runs are subject to the documented ±9%

@@ -13,15 +13,21 @@ what its last GREEN driver row actually verified:
   literals, driver-side assembly);
 - the oracle SQL catches oracle-only fixes.
 
+The driver verifies the first WINDOW (50) queries that
+``__spark_entry__.queries()`` returns, and ``window()`` picks them from this
+file: stale or never-stamped queries first, then sweep-basis stamps (the
+weaker basis), then driver stamps by ascending round, ties broken by name.
+An edited query therefore queues itself for the next driver round; no list
+is kept by hand.
+
 Workflow:
 
     python driver_state.py --check
-        exit 1 listing every query whose current hash differs from its
-        stamped last-green hash and which is NOT in _WINDOW_FRONT (i.e. a
-        stale green the next driver window would silently skip), plus any
-        never-stamped query outside the window. tests/test_driver_state.py
-        runs the same check, so the gap VERDICT r5 item 3 / r6 item 1
-        caught by hand can never reopen silently.
+        print the derived window and its composition (stale, sweep-basis,
+        driver by round); exit 1 listing the stale or never-stamped queries
+        that do not fit in the window (more than WINDOW of them), i.e. the
+        stale greens the next driver round would silently skip.
+        tests/test_driver_state.py runs the same check.
 
     python driver_state.py --stamp N
         after CORRECTNESS_r0N.json lands: stamp every green row in it with
@@ -42,11 +48,13 @@ import inspect
 import json
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 STATE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "DRIVER_STATE.json")
 PLANS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "PLANS.json")
+WINDOW = 50  # queries the driver verifies per round
 
 
 def current_hashes() -> dict[str, str]:
@@ -77,25 +85,42 @@ def save_state(state: dict) -> None:
     json.dump(state, open(STATE_PATH, "w"), indent=1, sort_keys=True)
 
 
-def check(window: tuple[str, ...] | None = None) -> list[str]:
-    """Return human-readable problems; empty means every green is fresh."""
-    from profitscout_engine_spark.queries import _WINDOW_FRONT
+def _is_stale(name: str, hashes: dict[str, str], state: dict) -> bool:
+    rec = state.get(name)
+    return rec is None or rec["hash"] != hashes[name]
 
-    win = set(window if window is not None else _WINDOW_FRONT)
-    state = load_state()
-    cur = current_hashes()
+
+def window(hashes: dict[str, str], state: dict, n: int = WINDOW) -> list[str]:
+    """The first ``n`` of ``hashes``' names in driver-verification order:
+    stale or unstamped, then sweep-basis, then driver stamps by ascending
+    round; ties broken by name."""
+
+    def key(name: str) -> tuple:
+        if _is_stale(name, hashes, state):
+            return (0, 0, name)
+        rec = state[name]
+        if rec["basis"] == "sweep":
+            return (1, 0, name)
+        return (2, rec["round"], name)
+
+    return sorted(hashes, key=key)[:n]
+
+
+def check(hashes: dict[str, str] | None = None, state: dict | None = None) -> list[str]:
+    """Return human-readable problems: the stale or unstamped queries that do
+    not fit in the driver window. Defaults to the current tree's files."""
+    hashes = current_hashes() if hashes is None else hashes
+    state = load_state() if state is None else state
+    stale = sorted(n for n in hashes if _is_stale(n, hashes, state))
     problems = []
-    for name, h in cur.items():
+    for name in stale[WINDOW:]:
         rec = state.get(name)
         if rec is None:
-            if name not in win:
-                problems.append(
-                    f"{name}: never driver/sweep-verified and not in _WINDOW_FRONT"
-                )
-        elif rec["hash"] != h and name not in win:
+            problems.append(f"{name}: never driver/sweep-verified and outside the window")
+        else:
             problems.append(
                 f"{name}: edited since its last green ({rec['basis']} "
-                f"{rec['round']}) but not in _WINDOW_FRONT — stale green"
+                f"{rec['round']}) and outside the window — stale green"
             )
     return problems
 
@@ -146,7 +171,17 @@ def stamp_sweep(label: str, names: list[str]) -> None:
 if __name__ == "__main__":
     args = sys.argv[1:]
     if args[:1] == ["--check"]:
-        probs = check()
+        hashes, state = current_hashes(), load_state()
+        win = window(hashes, state)
+        print("\n".join(win))
+        stale = [n for n in win if _is_stale(n, hashes, state)]
+        rounds = Counter(state[n]["round"] for n in win if n not in stale
+                         and state[n]["basis"] == "driver")
+        by_round = ", ".join(f"r{r}: {c}" for r, c in sorted(rounds.items()))
+        print(f"window: {len(stale)} stale, "
+              f"{len(win) - len(stale) - rounds.total()} sweep-basis, "
+              f"{rounds.total()} driver ({by_round or 'none'})")
+        probs = check(hashes, state)
         for p in probs:
             print(p)
         print(f"{len(probs)} problems")

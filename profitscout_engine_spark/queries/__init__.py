@@ -88,10 +88,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# Registration order is a driver contract: the correctness harness verifies the
-# FIRST 50 registered queries each round. Round 1 verified relational/aggregates/
-# windows (+3 execution); round 2 rotated in the then-dark families (similarity,
-# textops, curation, pipelines, timeseries, execution) — the union covers all 96.
+# Import order is registration order. The driver's verification order is not
+# kept here: __spark_entry__ derives it from DRIVER_STATE.json
+# (driver_state.window).
 _MODULES = (
     "similarity",
     "textops",
@@ -108,101 +107,10 @@ _MODULES = (
     "tpch",
 )
 
-# Round-11 window rotation (VERDICT r10 item 2). Composition, mechanically
-# derived from DRIVER_STATE.json after `--stamp 10` (50 greens stamped,
-# `--check` 0 problems):
-#   1-8    the 8 rows whose basis is the r10 builder sweep restamp (their
-#          plan shas migrated to the r10-closed AQE-statistics noise class;
-#          verified exact at sf0.01 + 2x, but a driver row is stronger) —
-#          the restamp queue the r10 verdict asked to lead with;
-#   9-10   queries edited THIS round (ivf_rebuild_audit re-shaped onto the
-#          bounded-panel sample-trainer path; quality_classifier_score's
-#          scorer core factored into _qc_scored for the drift ledger —
-#          plan sha unchanged, fn source changed) — their stamps go stale
-#          the moment the edits land;
-#   11-17  round-11 additions (cross-snapshot semantic dedup, incremental
-#          IVF maintenance ledger, quality-calibration drift, cross-
-#          snapshot contamination, vocab-coverage drift, tombstone
-#          propagation audit, LSH cell-skew audit);
-#   18-22  plan-sha migrations from the 92f2fa2 normalizer fixes (code
-#          untouched; same restamp class as r10's);
-#   23-50  freshness re-rows: 25 of the 30 remaining r4-vintage driver
-#          greens (the verdict's named five are among them; the five
-#          alphabetically-last — scd2_history, snapshot_diff,
-#          unigram_lm_logprob, vwap_running, weighted_sample_ares —
-#          wait one round: three slots went to the queries edited in
-#          the r11 OPTIMIZATION phase, which MUST re-verify).
-# Everything rotated out was driver-green r1-r10 on unchanged code and stays
-# pinned by tests/test_correctness.py + tests/test_driver_state.py.
-_WINDOW_FRONT = (
-    # -- sweep-basis only since the r10 AQE-stats plan-sha migration --
-    "enrichment_pipeline",
-    "gram_power_iteration",
-    "gram_topk_deflation",
-    "graph_modularity",
-    "k_core_peel",
-    "rfm_segmentation",
-    "table_profile",
-    "trader_pipeline",
-    # -- edited this round (stamps stale by construction) --
-    "ivf_rebuild_audit",
-    "quality_classifier_score",
-    # -- edited in the r11 OPTIMIZATION phase (restructured for fewer
-    #    exchanges / shared frames; proven exact vs the oracle at
-    #    sf0.01 + sf0.1 before landing — see OPTIMIZATION_r11.md) --
-    "source_minhash_similarity",
-    "label_propagation_rounds",
-    "community_top_terms",
-    # -- round-11 additions --
-    "cross_snapshot_semantic_dedup",
-    "ivf_incremental_maintain",
-    "quality_calibration_drift",
-    "cross_snapshot_contamination",
-    "vocab_coverage_drift",
-    "tombstone_propagation_audit",
-    "lsh_cell_skew_audit",
-    # -- plan-sha migrations: the 92f2fa2 normalizer fixes (group-level gid
-    #    canonicalization + nested Statistics) moved these five to their
-    #    stable canonical shas; code untouched, restamp like the r10 class --
-    "approx_distinct_sketch",
-    "corpus_curation_pipeline",
-    "crawl_budget_allocator",
-    "cube_flag_status",
-    "scanner_rank",
-    # -- freshness re-rows: 25 of the 30 remaining r4-vintage greens --
-    "key_skew_report",
-    "kmeans_lloyd_step",
-    "monte_carlo_paths",
-    "ohlc_resample",
-    "order_line_array_ops",
-    "pairwise_return_corr",
-    "pareto_frontier",
-    "pivot_lang_counts",
-    "pmi_collocations",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q6_revenue_delta",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "quantile_digest_merge",
-    "range_window_revenue",
-    "rank_normalize",
-    "retention_cohorts",
-    "rsi_macd",
-    "streaming_hll_users",
-    )
-
 
 def load_registry() -> dict[str, QuerySpec]:
-    """Import all query modules (idempotent) and return the registry, ordered
-    so the driver's 50-query correctness window sees ``_WINDOW_FRONT`` first."""
+    """Import all query modules (idempotent) and return the registry in
+    registration order."""
     for mod in _MODULES:
         importlib.import_module(f"{__name__}.{mod}")
-    front = {n: REGISTRY[n] for n in _WINDOW_FRONT if n in REGISTRY}
-    rest = {n: s for n, s in REGISTRY.items() if n not in front}
-    return {**front, **rest}
+    return dict(REGISTRY)

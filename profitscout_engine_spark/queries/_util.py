@@ -28,13 +28,6 @@ def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 
 _SHARED: dict[tuple[str, str, str], DataFrame] = {}
-# key -> wall seconds the BUILDER took at first materialization (VERDICT r11
-# item 4: make shared-frame build cost visible). Builders that are eager
-# (connected-component loops, localCheckpoints, bounded collects) charge
-# their real cost here; lazy builders read ~0 because their materialization
-# happens inside the first consumer's action, where the bench already
-# times it. bench.py copies this into BENCH_FULL.json after the suite.
-SHARED_BUILD_SECONDS: dict[str, float] = {}
 # Reentrant: builders COMPOSE shared frames (the MinHash band chain builds on
 # the distinct-shingle frame, IVF ranking on the packed vectors), so a builder
 # running under the lock may call shared() again on the same thread. A plain
@@ -98,13 +91,7 @@ def shared(
         _evict_stale(app_id)
         df = _SHARED.get(k)
         if df is None:
-            import time as _time
-
-            t0 = _time.time()
             df = builder()
-            SHARED_BUILD_SECONDS[key] = round(
-                SHARED_BUILD_SECONDS.get(key, 0.0) + (_time.time() - t0), 3
-            )
             _SHARED[k] = df
         sl = df.storageLevel
         if not (sl.useMemory or sl.useDisk):

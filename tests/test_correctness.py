@@ -35,64 +35,3 @@ def test_entry_contract(spark):
     q = e.queries()
     o = e.oracle_sql()
     assert set(o) <= set(q)
-
-
-def test_driver_window_order_is_pinned():
-    """The driver verifies the FIRST 50 registered queries. Round-11 rotation
-    (VERDICT r10 item 2): the 8 AQE-stats-class sweep-basis restamps LEAD
-    (the r10 restamp queue), then queries edited this round (the re-shaped
-    rebuild audit; the factored QC scorer), then round-11 additions, then
-    the normalizer-v1 plan-sha migrations, then the r4-vintage greens as
-    freshness re-rows."""
-    from profitscout_engine_spark.queries import _WINDOW_FRONT
-
-    names = list(load_registry())
-    assert names[: len(_WINDOW_FRONT)] == list(_WINDOW_FRONT)
-    assert len(_WINDOW_FRONT) == 50
-    # the r10 sweep-basis restamp queue leads the window
-    assert names[:4] == [
-        "enrichment_pipeline",
-        "gram_power_iteration",
-        "gram_topk_deflation",
-        "graph_modularity",
-    ]
-    window = set(names[:50])
-    assert {
-        # sweep-basis restamps
-        "table_profile",
-        "trader_pipeline",
-        # edited this round — stamps stale by construction
-        "ivf_rebuild_audit",
-        "quality_classifier_score",
-        # round-11 additions
-        "cross_snapshot_semantic_dedup",
-        "ivf_incremental_maintain",
-        "quality_calibration_drift",
-        "cross_snapshot_contamination",
-        "vocab_coverage_drift",
-        "tombstone_propagation_audit",
-        "lsh_cell_skew_audit",
-        # normalizer-v1 plan-sha migrations (code untouched)
-        "approx_distinct_sketch",
-        "crawl_budget_allocator",
-        "cube_flag_status",
-        # freshness re-rows (r4 vintage — the r10 verdict's named five)
-        "rsi_macd",
-        "monte_carlo_paths",
-        "order_line_array_ops",
-        "kmeans_lloyd_step",
-        "quantile_digest_merge",
-    } <= window
-    # round-10-verified names must be GONE from the front
-    assert not {
-        "ann_recall_curve",
-        "bigram_lm_logprob",
-        "dbscan_core_points",
-        "dedup_consensus",
-        "cross_snapshot_dedup",
-        "robots_policy_filter",
-        "packing_truncation_audit",
-        "kmeans_sample_train",
-        "string_extract",
-        "window_extrema",
-    } & set(_WINDOW_FRONT)
