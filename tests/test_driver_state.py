@@ -76,6 +76,18 @@ def test_no_silent_stale_greens():
     assert not problems, "\n".join(problems)
 
 
+def test_state_covers_every_query():
+    """Every registered query is either stamped or queued in the derived
+    window — a new query must enter the window (or be swept and stamped)
+    before it can leave the gate's sight."""
+    from profitscout_engine_spark.queries import load_registry
+
+    hashes, state = driver_state.current_hashes(), driver_state.load_state()
+    queued = set(driver_state.window(hashes, state))
+    uncovered = sorted(set(load_registry()) - set(state) - queued)
+    assert not uncovered, f"queries neither stamped nor windowed: {uncovered}"
+
+
 def test_entry_order_is_the_derived_window():
     """The driver verifies the first 50 of ``queries()``: they are the derived
     window, and ``oracle_sql()`` keeps the same order."""
