@@ -59,9 +59,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         return normalize_event_ts(df)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so queries can be written in Spark SQL."""
-    for name in names:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

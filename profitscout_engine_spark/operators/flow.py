@@ -1,4 +1,4 @@
-"""Per-group flow metrics — the scanner aggregation kernel (SURVEY §2.4 A1-A5).
+"""Per-group flow metrics — the scanner aggregation kernel (SURVEY §2.4 A1-A4).
 
 The reference walks an options chain per ticker in Python, summing per-side
 dollar volume, counting "active strikes", accumulating unusual-activity depth,
@@ -70,19 +70,4 @@ def argmin_nearest(df: DataFrame, key: str, target: Column, distance: Column, va
     _ = target  # distance is already derived from target by the caller
     return df.groupBy(key).agg(
         F.min_by(value, F.struct(distance, value)).alias(value_name)
-    )
-
-
-def top1_per_group(df: DataFrame, key: str, score: Column, tiebreak: Column) -> DataFrame:
-    """A5 — best row per group by ``score`` desc, ties broken by ``tiebreak``
-    asc. Uses ``max_by`` over a struct (single shuffle, no sort/window) —
-    at scale this beats a row_number window because the partial aggregation
-    collapses each map partition to one candidate row per group.
-    """
-    ranked = F.struct(score.alias("s"), (-tiebreak).alias("t"))
-    return (
-        df.withColumn("_rank", ranked)
-        .groupBy(key)
-        .agg(F.max_by(F.struct(*[c for c in df.columns if c != key]), F.col("_rank")).alias("best"))
-        .select(key, "best.*")
     )

@@ -139,15 +139,6 @@ def hyperplane_sign(table: int, plane: int, dim: int) -> int:
     return 1 if int(h[:2], 16) % 2 else -1
 
 
-def hyperplane_rows(dim: int = DIM) -> list[tuple[int, int, list[int]]]:
-    """[(table, plane, [sign_0..sign_{dim-1}]), ...] — the full LSH matrix."""
-    return [
-        (t, p, [hyperplane_sign(t, p, j) for j in range(dim)])
-        for t in range(LSH_TABLES)
-        for p in range(LSH_PLANES)
-    ]
-
-
 def lsh_buckets(vecs: DataFrame, vec_col: str = "v", dim: int = DIM) -> DataFrame:
     """(vec_id, table_id, bucket) — one row per hash table per vector.
 

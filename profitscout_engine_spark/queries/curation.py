@@ -891,17 +891,10 @@ SPREAD_MAX_HOP = 3
 
 
 def _spread_oracle() -> str:
-    from .similarity import _minhash_bands_ctes
+    from .similarity import _minhash_pairs_ctes
 
     return f"""
-    WITH RECURSIVE {_minhash_bands_ctes()},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
+    {_minhash_pairs_ctes()}
     split AS (
         SELECT doc_id,
                CASE WHEN substr(md5(doc_id::VARCHAR), 1, 1) IN ('e', 'f')
@@ -2754,25 +2747,11 @@ def training_order_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- corpus curation capstone: the end-to-end pipeline with drop accounting ----
 def _curation_pipeline_oracle() -> str:
-    from .similarity import _materialize_ctes, _minhash_bands_ctes
+    from .similarity import _materialize_ctes, _minhash_components_ctes
     from .textops import FILTER_GATE_SELECT, FILTER_METRICS_CTES
 
     sql = f"""
-    WITH RECURSIVE {_minhash_bands_ctes()},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-    nodes AS (SELECT DISTINCT a AS node FROM sym),
-    reach AS (
-        SELECT node AS d, node AS m FROM nodes
-        UNION
-        SELECT r.d, s.b FROM reach r JOIN sym s ON s.a = r.m
-    ),
-    comp AS (SELECT d AS doc_id, MIN(m) AS component FROM reach GROUP BY d),
+    {_minhash_components_ctes()},
     {FILTER_METRICS_CTES},
     gate AS ({FILTER_GATE_SELECT}),
     chain0 AS (

@@ -19,7 +19,7 @@ from ..operators import text as tx
 from ..operators import similarity as sim
 from ..operators.graph import lpa_round, symmetric_edges
 from . import query
-from ._util import fan_out, shared, t
+from ._util import fan_out, shared, shared_value, t
 
 TOPK = 5
 LSH_TOPK = 3
@@ -364,6 +364,34 @@ def _minhash_bands_ctes() -> str:
     )"""
 
 
+def _minhash_pairs_ctes() -> str:
+    """``WITH RECURSIVE`` head shared by the near-dup graph oracles: band rows
+    → distinct band-sharing pairs (d1 < d2) → the symmetric edge list
+    ``sym(a, b)``. Ends after ``sym AS (...),`` — callers append CTEs."""
+    return f"""WITH RECURSIVE {_minhash_bands_ctes()},
+    pairs AS (
+        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+        FROM bands a JOIN bands b
+          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
+         AND a.doc_id < b.doc_id
+    ),
+    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),"""
+
+
+def _minhash_components_ctes() -> str:
+    """:func:`_minhash_pairs_ctes` plus connected components by recursive
+    reachability: ``comp(doc_id, component)``, component = min member, for
+    every document with at least one near-dup edge."""
+    return f"""{_minhash_pairs_ctes()}
+    nodes AS (SELECT DISTINCT a AS node FROM sym),
+    reach AS (
+        SELECT node AS d, node AS m FROM nodes
+        UNION
+        SELECT r.d, s.b FROM reach r JOIN sym s ON s.a = r.m
+    ),
+    comp AS (SELECT d AS doc_id, MIN(m) AS component FROM reach GROUP BY d)"""
+
+
 def _minhash_oracle() -> str:
     return f"""
     WITH {_minhash_bands_ctes()}
@@ -524,21 +552,7 @@ def incremental_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- near-dup CLUSTERING: connected components over the pair graph ----------
 def _components_oracle() -> str:
     return f"""
-    WITH RECURSIVE {_minhash_bands_ctes()},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-    nodes AS (SELECT DISTINCT a AS node FROM sym),
-    reach AS (
-        SELECT node AS d, node AS m FROM nodes
-        UNION
-        SELECT r.d, s.b FROM reach r JOIN sym s ON s.a = r.m
-    ),
-    comp AS (SELECT d AS doc_id, MIN(m) AS component FROM reach GROUP BY d)
+    {_minhash_components_ctes()}
     SELECT doc_id, component,
            COUNT(*) OVER (PARTITION BY component) AS cluster_size,
            doc_id = component AS is_canonical
@@ -571,21 +585,7 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- leakage-safe train/val/test split (dedup-aware sharding) -----------------
 def _leakage_safe_split_oracle() -> str:
     sql = f"""
-    WITH RECURSIVE {_minhash_bands_ctes()},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-    nodes AS (SELECT DISTINCT a AS node FROM sym),
-    reach AS (
-        SELECT node AS d, node AS m FROM nodes
-        UNION
-        SELECT r.d, s.b FROM reach r JOIN sym s ON s.a = r.m
-    ),
-    comp AS (SELECT d AS doc_id, MIN(m) AS component FROM reach GROUP BY d),
+    {_minhash_components_ctes()},
     assigned AS (
         SELECT doc.doc_id, doc.n_chars,
                COALESCE(c.component, doc.doc_id) AS rep
@@ -694,21 +694,7 @@ _QUALITY_CTES = """
 
 def _keep_best_oracle() -> str:
     return f"""
-    WITH RECURSIVE {_minhash_bands_ctes()},
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_sig = b.band_sig
-         AND a.doc_id < b.doc_id
-    ),
-    sym AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-    nodes AS (SELECT DISTINCT a AS node FROM sym),
-    reach AS (
-        SELECT node AS d, node AS m FROM nodes
-        UNION
-        SELECT r.d, s.b FROM reach r JOIN sym s ON s.a = r.m
-    ),
-    comp AS (SELECT d AS doc_id, MIN(m) AS component FROM reach GROUP BY d),
+    {_minhash_components_ctes()},
     {_QUALITY_CTES},
     fulljoin AS (
         SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component, qs.quality_score
@@ -2903,13 +2889,16 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streamed verdicts equal the batch first-occurrence dedup over
     the same corpus. Python appears only in the licensed
     applyInPandasWithState kernel (Arrow-batched pandas)."""
-    import tempfile
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..streaming import drain, stream_documents_ordered
+    from ..streaming import (
+        BOUNDED_STATE_PARTITIONS,
+        run_to_memory,
+        stream_documents_ordered,
+    )
 
     # The shard width is part of the stream's STATE LAYOUT, so a bad value
     # raises instead of being clamped: clamping would silently re-key the
@@ -3005,26 +2994,7 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"streamdedup_{next(tempfile._get_candidate_names())}"
-    # Narrow the stateful shuffle for the duration of the stream: state
-    # tasks cost a Python worker each, per micro-batch — 5 batches x 32
-    # partitions of near-empty Arrow hops dominated wall time at sf0.1
-    # (state volume is tiny; a real deployment sizes this to state, not
-    # to the session default). Restored after the stream drains.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            verdicts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 240)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sink = spark.table(name)
+    sink = run_to_memory(verdicts, "update", BOUNDED_STATE_PARTITIONS)
     fm = (
         sink.where(F.col("earlier") >= 0)
         .groupBy("doc_id")
@@ -4715,12 +4685,6 @@ def _km_argmin(c: dict[int, list[int]]):
     return F.array_min(F.array(*entries))
 
 
-# trained-centroid cache, the driver-dict analogue of shared(): training
-# is deterministic, and both the trainer query and the index-rebuild
-# pipeline run the IDENTICAL loop — one training per session+dataset.
-_KM_CENT_CACHE: dict[tuple[str, str], dict[int, list[int]] | None] = {}
-
-
 def _km_train(spark: SparkSession, sf_dir: str) -> dict[int, list[int]] | None:
     """Run the Lloyd loop to convergence (or KM_TRAIN_ITERS) and return the
     trained centroids, None on an empty corpus. Per-iteration driver state
@@ -4741,16 +4705,12 @@ def _km_train(spark: SparkSession, sf_dir: str) -> dict[int, list[int]] | None:
 
 
 def _km_train_cached(spark, sf_dir: str, tag: str, frame_fn):
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key in _KM_CENT_CACHE:
-        cached = _KM_CENT_CACHE[key]
-        return None if cached is None else {c: list(v) for c, v in cached.items()}
-    # evict entries from dead sessions (the shared()-frame discipline)
-    for k in [k for k in _KM_CENT_CACHE if k[0] != key[0]]:
-        del _KM_CENT_CACHE[k]
-    cent = _km_lloyd_loop(frame_fn())
-    _KM_CENT_CACHE[key] = None if cent is None else {c: list(v) for c, v in cent.items()}
-    return cent
+    """Trained centroids memoized per (session, dataset, tag): training is
+    deterministic, so every consumer of one training frame shares one loop.
+    Callers only read the returned dict."""
+    return shared_value(
+        spark, sf_dir, f"km_centroids:{tag}", lambda: _km_lloyd_loop(frame_fn())
+    )
 
 
 def _km_lloyd_loop(e: DataFrame) -> dict[int, list[int]] | None:

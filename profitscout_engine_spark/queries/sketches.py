@@ -634,13 +634,12 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     at m registers regardless of stream length. The pandas hop is the
     licensed applyInPandasWithState kernel (SURVEY §2.10).
     """
-    import tempfile
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..streaming import drain, stream_events
+    from ..streaming import BOUNDED_STATE_PARTITIONS, run_to_memory, stream_events
 
     ev = stream_events(spark, sf_dir, with_watermark=None)
     parsed = _with_registers(
@@ -665,29 +664,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"hllstream_{next(tempfile._get_candidate_names())}"
-    # Pin the stream to 8 shuffle partitions (the click_attribution_stream
-    # rule): the stateful exchange opens one state-store provider per
-    # partition per micro-batch, and with only 256 bounded register states
-    # the session's 32 partitions are store-commit overhead, not
-    # parallelism. State partitioning is fixed per query at start, so the
-    # conf scopes to this stream; restored immediately. A real deployment
-    # sizes this to STATE CARDINALITY (m registers), which never grows
-    # with the corpus — the same 8 is right at 100 TB.
-    old_par = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            regs_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_par)
-    drain(q)
-    sink = spark.table(name)
+    sink = run_to_memory(regs_stream, "update", BOUNDED_STATE_PARTITIONS)
     # update-mode sink holds one row per (register, batch-it-changed-in);
     # register maxes are monotone, so latest state == max over emissions.
     regs = sink.groupBy("ridx").agg(F.max("mx").alias("mx"))
@@ -739,9 +716,7 @@ def click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle row; at 100 TB/day the same plan runs continuously with
     state bounded by watermark + lookback.
     """
-    import tempfile
-
-    from ..streaming import drain, stream_events
+    from ..streaming import BOUNDED_STATE_PARTITIONS, run_to_memory, stream_events
     from ..streaming.stateful import purchase_click_attribution
 
     ev = stream_events(spark, sf_dir, with_watermark=None).where(
@@ -750,27 +725,7 @@ def click_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = purchase_click_attribution(
         ev.where("event_type = 'purchase'"), ev.where("event_type = 'click'")
     )
-    name = f"attrib_{next(tempfile._get_candidate_names())}"
-    # A stream-stream join opens FOUR state-store providers per shuffle
-    # partition (left/right × two key layouts); at the session's 32
-    # partitions that is 128 store commits per batch and store overhead —
-    # not the join — dominates. Pin the streaming query to 8 partitions
-    # (state partitioning is fixed per query at start, so this scopes to
-    # this stream only; the session conf is restored immediately).
-    old_par = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q_ = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_par)
-    drain(q_)
-    return spark.table(name).select(
+    return run_to_memory(out, "append", BOUNDED_STATE_PARTITIONS).select(
         "user_id",
         "purchase_id",
         "click_id",
@@ -1201,13 +1156,16 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Events arrive via the deterministic out-of-order 5-slice stage
     (arrival order cannot matter and the multi-batch run proves it).
     """
-    import tempfile
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..streaming import drain, stream_events_shuffled
+    from ..streaming import (
+        BOUNDED_STATE_PARTITIONS,
+        run_to_memory,
+        stream_events_shuffled,
+    )
 
     ev = stream_events_shuffled(spark, sf_dir, n_files=5).select(
         F.col("user_id").cast("string").alias("u")
@@ -1250,29 +1208,9 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"hhcms_{next(tempfile._get_candidate_names())}"
-    # Pin the stream to 8 shuffle partitions (the click_attribution_stream
-    # rule): d·w CMS cells are a FIXED state cardinality, so the session's
-    # 32 partitions mean 32 state-store commits per micro-batch for a few
-    # hundred counters — store machinery, not parallelism. Scoped to this
-    # stream (state partitioning fixes at start), restored immediately;
-    # the bounded register count makes the same choice right at 100 TB.
-    old_par = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            reg_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_par)
-    drain(q)
     # counters are monotone; latest state == max over update emissions
     sketch = (
-        spark.table(name)
+        run_to_memory(reg_stream, "update", BOUNDED_STATE_PARTITIONS)
         .groupBy("seed", "bucket")
         .agg(F.max("cnt").cast("long").alias("cnt"))
     )

@@ -1063,13 +1063,12 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch one (the oracle proves it: final position, running max and
     alarm flag all value-match). Python appears only in the licensed
     pandas state kernel."""
-    import tempfile
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..streaming import drain, stream_events
+    from ..streaming import BOUNDED_STATE_PARTITIONS, run_to_memory, stream_events
 
     ev = t(spark, sf_dir, "events")
     stats = (
@@ -1139,21 +1138,7 @@ def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"cusumstream_{next(tempfile._get_candidate_names())}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sink = spark.table(name)
+    sink = run_to_memory(out, "update", BOUNDED_STATE_PARTITIONS)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
     return (
         sink.withColumn("rn", F.row_number().over(w))
@@ -1255,9 +1240,11 @@ def stream_watermark_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks: state is bounded by the watermark horizon, not the
     stream's history.
     """
-    import tempfile
-
-    from ..streaming import drain, stream_events_shuffled
+    from ..streaming import (
+        BOUNDED_STATE_PARTITIONS,
+        run_to_memory,
+        stream_events_shuffled,
+    )
 
     ev = stream_events_shuffled(spark, sf_dir, n_files=WM_SLICES).withWatermark(
         "ts", "30 minutes"
@@ -1265,36 +1252,20 @@ def stream_watermark_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
         F.count("*").alias("n_on_time")
     )
-    name = f"wmaudit_{next(tempfile._get_candidate_names())}"
-    # Pin the stream to 8 shuffle partitions (the click_attribution_stream
-    # rule): windowed-aggregation state is bounded by the watermark
-    # horizon (open 1-hour windows), so the session's 32 partitions are
-    # 32 state-store commits per micro-batch for a handful of windows.
-    # Scoped to this stream (state partitioning fixes at start), restored
-    # immediately. The watermark bound — not the corpus — sizes this at
-    # 100 TB too. NOTE the watermark TRAJECTORY (batch boundaries, slice
-    # order) is untouched; only the state exchange's partition count
-    # changes, which cannot alter which rows are late.
-    old_par = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.select(F.col("win.start").alias("window_start"), "n_on_time")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_par)
-    drain(q)
+    # The stateful exchange's partition count cannot alter which rows are
+    # late: the watermark trajectory (batch boundaries, slice order) is fixed
+    # by the staged slices.
+    sink = run_to_memory(
+        agg.select(F.col("win.start").alias("window_start"), "n_on_time"),
+        "append",
+        BOUNDED_STATE_PARTITIONS,
+    )
     # Sum the sink by window_start: a row landing in the one-batch gap
     # (window end <= eviction watermark but > late-filter watermark) AFTER
     # its window was evicted re-creates state and appends a SECOND sink row
     # for the same window — the kept-row total is split across the two
     # emissions, so the audit aggregates emissions before joining totals.
-    streamed = spark.table(name).groupBy("window_start").agg(
+    streamed = sink.groupBy("window_start").agg(
         F.sum("n_on_time").alias("n_on_time")
     )
     totals = (

@@ -12,14 +12,32 @@ incremental state) map onto Structured Streaming primitives:
 ``run_stream_aggregation`` executes the SAME logical aggregation as the batch
 query through the streaming engine, so tests can assert batch/stream parity —
 the property that makes the daily pipeline re-runnable as an incremental one.
+
+Every stream that ends in a memory sink runs through :func:`run_to_memory`
+(AvailableNow trigger, :func:`drain`, the sink read back as a static frame).
+Pass ``state_partitions=BOUNDED_STATE_PARTITIONS`` when the stream's state
+cardinality is fixed by the query (windows × segments, sketch registers, a
+watermark horizon) rather than by the data; keep the session default when
+state grows with the data (per-user totals).
 """
 
 from __future__ import annotations
 
-import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import SHUFFLE_PARTITIONS_CONF
+
+# Shuffle partitions for a stream whose state cardinality is bounded by the
+# query, not the data. Each stateful shuffle partition opens state-store
+# providers and commits them on every micro-batch (a stream-stream join opens
+# four per partition; a pandas state kernel adds a Python worker hop), so
+# beyond a handful of partitions the session default — the host's task slots,
+# 32 on a 32-core host — buys store commits, not parallelism. The bound that
+# makes 8 right here (registers, windows, segments) holds at any corpus size.
+BOUNDED_STATE_PARTITIONS = 8
 
 
 def drain(q, timeout_sec: int = 240) -> None:
@@ -38,6 +56,37 @@ def drain(q, timeout_sec: int = 240) -> None:
                 f"streaming query {q.name or q.id} did not finish within "
                 f"{timeout_sec}s; memory-sink contents would be partial"
             )
+
+
+def run_to_memory(
+    df: DataFrame, output_mode: str, state_partitions: int | None = None
+) -> DataFrame:
+    """Run a streaming frame to completion into a uniquely named memory sink
+    (``Trigger.AvailableNow``, :func:`drain`) and return the sink as a static
+    DataFrame.
+
+    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for this
+    stream only: a streaming query takes its conf from the session when it
+    starts and keeps that shuffle-partition count for its whole run, so the
+    session value is restored right after ``.start()``, also when
+    ``.start()`` raises."""
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex}"
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    old = spark.conf.get(SHUFFLE_PARTITIONS_CONF)
+    if state_partitions is not None:
+        spark.conf.set(SHUFFLE_PARTITIONS_CONF, str(state_partitions))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS_CONF, old)
+    drain(q)
+    return spark.table(name)
 
 
 def _stage_slices(src_path: str, tag: str, n_files: int, write_slices) -> str:
@@ -140,17 +189,7 @@ def run_stream_aggregation(
     reference's overwrite-the-day idempotent sink pattern.
     """
     events = stream_events(spark, sf_dir, with_watermark=with_watermark)
-    agg = agg_builder(events)
-    name = f"stream_result_{next(tempfile._get_candidate_names())}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
-    return spark.table(name)
+    return run_to_memory(agg_builder(events), "complete")
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,8 +204,6 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate only (bounded by windows × segments), never the joined
     rows. This is the canonical 'enrich the firehose against the
     warehouse dim' topology; batch parity is the oracle."""
-    import tempfile
-
     events = stream_events(spark, sf_dir, with_watermark=None)
     dim = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -177,27 +214,7 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("win"), "c_mktsegment")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
     )
-    name = f"enrich_{next(tempfile._get_candidate_names())}"
-    # Pin the stream to 8 shuffle partitions (the click_attribution_stream
-    # rule): streaming state here is the windowed rollup only — bounded by
-    # hour-windows × market segments — so 32 state-store commits per
-    # micro-batch are machinery, not parallelism. Scoped to this stream
-    # (state partitioning fixes at start), restored immediately; the
-    # windows×segments bound sizes this at 100 TB too.
-    old_par = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_par)
-    drain(q)
-    return spark.table(name)
+    return run_to_memory(agg, "complete", BOUNDED_STATE_PARTITIONS)
 
 
 def stream_documents_ordered(

@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# NOTE: `drain` is imported inside each function that starts a stream (not at
-# module level) so streaming/__init__ stays free to import this module without
-# a circular-import ordering constraint.
+# NOTE: `drain` / `run_to_memory` are imported inside each function that starts
+# a stream (not at module level) so streaming/__init__ stays free to import
+# this module without a circular-import ordering constraint.
 
 
 def incremental_user_totals(events: DataFrame) -> DataFrame:
@@ -71,22 +71,10 @@ def run_stateful_totals(spark, sf_dir: str) -> DataFrame:
     """Drive :func:`incremental_user_totals` to completion (AvailableNow,
     memory sink, update mode) and return the LAST emitted state per user
     — after the final batch this equals the batch `groupBy` totals."""
-    import tempfile
-
-    from . import drain, stream_events
+    from . import run_to_memory, stream_events
 
     events = stream_events(spark, sf_dir, with_watermark=None)
-    out = incremental_user_totals(events)
-    name = f"stateful_{next(tempfile._get_candidate_names())}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
-    sink = spark.table(name)
+    sink = run_to_memory(incremental_user_totals(events), "update")
     # update-mode sink holds one row per (user, batch-it-changed-in);
     # running totals are monotone in n_events → latest = max n_events.
     from pyspark.sql import Window

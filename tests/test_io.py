@@ -375,7 +375,7 @@ def test_paged_json_stream_tail_follow(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "stream did not finish within 120 s"
 
     drain()
     got = {tuple(r) for r in spark.read.parquet(out).collect()}

@@ -13,21 +13,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from profitscout_engine_spark.catalog import table
+from profitscout_engine_spark.session import SHUFFLE_PARTITIONS_CONF
+from profitscout_engine_spark.streaming import (
+    BOUNDED_STATE_PARTITIONS,
+    drain,
+    run_to_memory,
+)
 from profitscout_engine_spark.streaming.stateful import (
     incremental_user_totals,
     windowed_counts_append,
 )
-
-
-def _run_stream(df, output_mode: str, name: str):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
 
 
 def _staged_files(spark, tmp_path, frames):
@@ -47,6 +42,59 @@ def _staged_files(spark, tmp_path, frames):
     return root
 
 
+@pytest.fixture
+def three_shuffle_partitions(spark):
+    """The session at 3 shuffle partitions, restored after the test."""
+    old = spark.conf.get(SHUFFLE_PARTITIONS_CONF)
+    spark.conf.set(SHUFFLE_PARTITIONS_CONF, "3")
+    yield
+    spark.conf.set(SHUFFLE_PARTITIONS_CONF, old)
+
+
+@pytest.mark.parametrize(
+    "state_partitions, expected", [(BOUNDED_STATE_PARTITIONS, 8), (None, 3)]
+)
+def test_run_to_memory_pins_state_partitions(
+    spark, tmp_path, monkeypatch, three_shuffle_partitions, state_partitions, expected
+):
+    """A pinned stream keeps its own shuffle-partition count for the whole
+    run; an unpinned one takes the session's. Either way the session conf
+    reads its old value afterwards."""
+    import profitscout_engine_spark.streaming as streaming
+
+    queries = []
+    real_drain = streaming.drain
+    monkeypatch.setattr(
+        streaming, "drain", lambda q: (queries.append(q), real_drain(q))
+    )
+    mk = lambda rows: spark.createDataFrame(rows, "k long, v double")
+    root = _staged_files(spark, tmp_path, [mk([(1, 1.0), (2, 2.0)]), mk([(1, 3.0)])])
+    stream = spark.readStream.schema("k long, v double").parquet(root)
+    counts = stream.groupBy("k").agg(F.count("*").alias("n"))
+
+    got = run_to_memory(counts, "complete", state_partitions).toPandas()
+
+    assert dict(zip(got.k, got.n)) == {1: 2, 2: 1}
+    (q,) = queries
+    state = q.recentProgress[-1]["stateOperators"][0]
+    assert state["numShufflePartitions"] == expected
+    assert spark.conf.get(SHUFFLE_PARTITIONS_CONF) == "3"
+
+
+def test_run_to_memory_restores_conf_when_start_raises(
+    spark, tmp_path, three_shuffle_partitions
+):
+    """Complete mode on a stream without an aggregation fails in .start();
+    the pinned conf must not leak into the session."""
+    from pyspark.errors import AnalysisException
+
+    root = _staged_files(spark, tmp_path, [spark.createDataFrame([(1,)], "k long")])
+    stream = spark.readStream.schema("k long").parquet(root)
+    with pytest.raises(AnalysisException):
+        run_to_memory(stream, "complete", BOUNDED_STATE_PARTITIONS)
+    assert spark.conf.get(SHUFFLE_PARTITIONS_CONF) == "3"
+
+
 def test_state_survives_micro_batches(spark, sf_dir, tmp_path):
     """Split events into 3 chronological chunks → 3 micro-batches; the
     final GroupState per user must equal the one-shot batch totals."""
@@ -62,8 +110,7 @@ def test_state_survives_micro_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(root)
     )
-    _run_stream(incremental_user_totals(stream), "update", "state_batches")
-    sink = spark.table("state_batches")
+    sink = run_to_memory(incremental_user_totals(stream), "update")
 
     # state grew across batches: users emitted in >1 batch have >1 row
     multi = sink.groupBy("user_id").count().where("count > 1").count()
@@ -104,8 +151,7 @@ def test_watermark_drops_late_event(spark, tmp_path):
     stream = (
         spark.readStream.schema(batch1.schema).option("maxFilesPerTrigger", 1).parquet(root)
     )
-    _run_stream(windowed_counts_append(stream), "append", "late_data")
-    rows = spark.table("late_data").collect()
+    rows = run_to_memory(windowed_counts_append(stream), "append").collect()
     emitted = [(r.window_start, r.n) for r in rows]
 
     # [10:00,11:00) finalized exactly once, WITHOUT the 10:45 straggler.
@@ -149,8 +195,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     root = _staged_files(spark, tmp_path, [b1, b2])
 
     stream = spark.readStream.schema(b1.schema).option("maxFilesPerTrigger", 1).parquet(root)
-    _run_stream(streaming_dedup(stream, "k"), "append", "stream_dedup")
-    out = spark.table("stream_dedup").toPandas()
+    out = run_to_memory(streaming_dedup(stream, "k"), "append").toPandas()
     assert sorted(out.k) == ["a", "b", "c"]  # one row per key
     assert float(out[out.k == "a"].v.iloc[0]) == 1.0  # first occurrence won
 
@@ -182,9 +227,8 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     croot = _staged_files(spark, tmp_path / "c", halves(clicks))
     ps = spark.readStream.schema(purchases.schema).option("maxFilesPerTrigger", 1).parquet(proot)
     cs = spark.readStream.schema(clicks.schema).option("maxFilesPerTrigger", 1).parquet(croot)
-    _run_stream(purchase_click_attribution(ps, cs), "append", "attribution_stream")
     streamed = (
-        spark.table("attribution_stream")
+        run_to_memory(purchase_click_attribution(ps, cs), "append")
         .toPandas()
         .sort_values(["purchase_id", "click_id"])
         .reset_index(drop=True)
@@ -239,9 +283,8 @@ def test_streaming_ohlc_candles_match_batch(spark, sf_dir, tmp_path):
             "open", "high", "low", "close", "volume", "n_trades",
         )
     )
-    _run_stream(candles, "complete", "ohlc_stream")
     got = (
-        spark.sql("SELECT * FROM ohlc_stream")
+        run_to_memory(candles, "complete")
         .toPandas()
         .sort_values(["user_id", "bar_start"])
         .reset_index(drop=True)
@@ -288,8 +331,7 @@ def test_event_time_timeout_closes_idle_sessions(spark, sf_dir, tmp_path):
         .withWatermark("ts", "1 minute")
     )
     closed = expire_idle_sessions(stream, gap="1 hour")
-    _run_stream(closed, "append", "idle_closed")
-    got = spark.sql("SELECT * FROM idle_closed").toPandas()
+    got = run_to_memory(closed, "append").toPandas()
     got = got[got.user_id.notna()]
     closed = set(got.user_id.astype(int))
     # every artificially-idled user must fire (their deadline is far
@@ -338,8 +380,7 @@ def test_stream_merge_to_txn_exactly_once(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = stream_merge_to_txn(stream, root, keys=["event_id"], checkpoint=checkpoint)
-        q.awaitTermination(120)
+        drain(stream_merge_to_txn(stream, root, keys=["event_id"], checkpoint=checkpoint))
 
     run(str(tmp_path / "ckpt1"))
     v_first = current_version(root)
