@@ -14,7 +14,6 @@ Layout
 - ``exprs``      : scalar Column-expression library (coalesce chains, guarded
                    ratios, tier ladders, contract-symbol formatting)
 - ``operators/`` : relational/window/time-series operator implementations
-- ``functions/`` : LLM-data-pipeline surface (dedup, similarity, text stats)
 - ``sources/``   : readers/writers (partition overwrite, merge-upsert)
 - ``streaming/`` : Structured Streaming equivalents over the events table
 - ``queries/``   : named query registry wired into ``__spark_entry__.py``

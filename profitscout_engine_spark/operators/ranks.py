@@ -13,22 +13,36 @@ the classic range-bucketed decomposition:
    (shuffle-read order is nondeterministic), silently mis-aligning the
    two — observed at sf0.1. A value-deterministic bucket id cannot drift,
    and ties land in one bucket by construction.
-2. Per-bucket row counts (<= num_buckets rows) -> running prefix offsets
-   via a window over the *bucket frame only* (bounded: num_buckets rows)
-   -> broadcast back.
-3. Within-bucket ``rank()`` — distributed, one sort per range slice.
-4. global rank = prefix offset + within-bucket rank; tie counts are
-   purely local by (1), so fractional/average ranks (the Spearman
-   treatment) follow with the local tie count.
+2. Per-bucket row counts or sums (<= num_buckets rows) -> running prefix
+   offsets via a window over the *bucket frame only* (bounded:
+   num_buckets rows) -> broadcast back.
+3. Within-bucket running count or sum — distributed, one sort per range
+   slice.
+4. global rank or prefix sum = prefix offset + within-bucket value; tie
+   counts are purely local by (1), so fractional/average ranks (the
+   Spearman treatment) follow with the local tie count.
 
 Boundary quality only affects load balance, never correctness; a
 degenerate distribution (all rows one value) collapses to one bucket and
 still ranks exactly.
+
+Three kernels carry every operator in this module:
+
+- :func:`_grouped_order_statistics` — the selection kernel (boundaries ->
+  counts -> locate -> ``row_number``) behind :func:`order_statistics` and
+  the distributed branches of :func:`exact_percentiles` and
+  :func:`grouped_exact_percentiles`;
+- :func:`_interp_plan` / :func:`_interpolate` — the engines' percentile
+  interpolation rule, shared with the bounded-domain strategy
+  :func:`grouped_exact_percentiles_discrete`;
+- :func:`_prefix_sum` — the prefix-offset kernel behind
+  :func:`with_prefix_sum` and :func:`with_avg_rank`.
 """
 
 from __future__ import annotations
 
 import functools
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -85,6 +99,21 @@ def _as_double(df: DataFrame, key: Column) -> Column:
     return key.cast("double")
 
 
+def _approx_bounds(dkey: Column, num_buckets: int) -> Column:
+    """Aggregate expression: the num_buckets-1 approximate quantiles of
+    ``dkey`` that serve as range-bucket boundaries."""
+    return F.percentile_approx(
+        dkey, F.array(*[F.lit(i / num_buckets) for i in range(1, num_buckets)])
+    )
+
+
+def _global_boundaries(df: DataFrame, dkey: Column, num_buckets: int) -> list[float]:
+    """One tiny driver round-trip: the 1-row boundary literals shared by
+    every branch of a global (ungrouped) decomposition."""
+    [row] = df.select(_approx_bounds(dkey, num_buckets).alias("b")).collect()
+    return sorted(set(row["b"] or []))
+
+
 def _bucket_expr(key: Column, boundaries: list[float]) -> Column:
     """Ordered range-bucket id as a pure expression: count of boundaries
     strictly below the key (NULLs -> bucket -1, matching NULLS FIRST)."""
@@ -96,90 +125,189 @@ def _bucket_expr(key: Column, boundaries: list[float]) -> Column:
     return F.when(key.isNull(), F.lit(-1)).otherwise(bucket)
 
 
-def order_statistics(
-    df: DataFrame, col: str, positions: list[int], num_buckets: int = 32
-) -> dict[int, float]:
-    """Exact values at the given 1-indexed positions of ``col``'s sorted
-    order (nulls excluded), without any single aggregation buffer or
-    single-task sort holding the column. Decomposition: value-pure range
-    buckets -> per-bucket counts (bounded frame, collected) locate each
-    position's bucket and local offset on the driver -> one distributed
-    ``row_number`` pass over ONLY the needed buckets selects the values.
-    Tie order within ``row_number`` is arbitrary but irrelevant — the
-    value at a sorted position is well-defined regardless.
+def group_key(*cols: str) -> Column:
+    """The group-key string expression consumers join percentile maps on —
+    identical to the key format grouped_exact_percentiles hashes groups
+    by (unit-separator-joined string casts)."""
+    return F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols])
 
-    The input projection is persisted for the operator's own passes
-    (boundaries, counts, selection) and unpersisted before returning —
-    every output is collected to driver literals, so nothing downstream
-    holds the cached plan, and without the cache each pass replays the
-    full upstream subtree (a join-heavy input made one consumer 15×
-    slower in the round-5 bench before this)."""
-    key = F.col(col)
+
+def _any(conds: list[Column]) -> Column:
+    return functools.reduce(lambda a, b: a | b, conds, F.lit(False))
+
+
+def _grouped_order_statistics(
+    df: DataFrame,
+    group_cols: list[str],
+    col: str,
+    positions_for: Callable[[int], Iterable[int]],
+    num_buckets: int,
+) -> tuple[dict[tuple, dict[int, float]], dict[tuple, int]]:
+    """The selection kernel: exact values at 1-indexed positions of
+    ``col``'s sorted order (nulls excluded) within each group, where
+    ``positions_for(n)`` names the positions a group of n rows needs —
+    without any single aggregation buffer or single-task sort holding a
+    group. ``group_cols=[]`` is the single global group ``()``.
+
+    1. one pass: per-group approx boundary arrays and row counts,
+       collected (|groups| rows — the bounded axis — and becoming driver
+       literals is what makes the bucket id a pure value function, the
+       determinism requirement from the module docstring);
+    2. one pass: per-(group, bucket) counts (≤ |groups|·buckets rows)
+       locate each position's bucket and local offset on the driver;
+    3. one pass: ``row_number`` within (group, bucket) partitions —
+       distributed — over ONLY the needed buckets selects the values. Tie
+       order within ``row_number`` is arbitrary but irrelevant: the value
+       at a sorted position is well-defined regardless.
+
+    Returns ``({group: {position: value}}, {group: n})``, both empty for
+    empty or all-NULL input; positions past a group's n are absent. Null
+    group keys are not supported. The value projection is persisted
+    across the three passes and unpersisted before returning — every
+    output is a driver literal, so nothing downstream holds the cached
+    plan, and without the cache each pass replays the upstream subtree (a
+    join-heavy input made one consumer 15× slower in the round-5 bench)."""
     vals = (
-        df.select(key.cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
+        df.select(
+            group_key(*group_cols).alias("_g"),
+            *[F.col(g).alias(f"_g{i}") for i, g in enumerate(group_cols)],
+            F.col(col).alias("_v"),
+            _as_double(df, F.col(col)).alias("_vd"),
+        )
+        .where(F.col("_v").isNotNull())
         .persist()
     )
     try:
-        return _order_statistics_inner(vals, positions, num_buckets)
+        brows = (
+            vals.groupBy("_g")
+            .agg(
+                _approx_bounds(F.col("_vd"), num_buckets).alias("b"),
+                F.count(F.lit(1)).alias("n"),
+                *[F.first(f"_g{i}").alias(f"_g{i}") for i in range(len(group_cols))],
+            )
+            .collect()
+        )
+        if not brows:
+            return {}, {}
+        gvals = {
+            r["_g"]: tuple(r[f"_g{i}"] for i in range(len(group_cols))) for r in brows
+        }
+        bmap = F.create_map(
+            *[
+                x
+                for r in brows
+                for x in (F.lit(r["_g"]), F.array(*[F.lit(b) for b in sorted(set(r["b"]))]))
+            ]
+        )
+        part = vals.withColumn(
+            _BKT, F.size(F.filter(F.element_at(bmap, F.col("_g")), lambda b: b < F.col("_vd")))
+        )
+        counts: dict[str, list[tuple[int, int]]] = {}
+        for r in part.groupBy("_g", _BKT).agg(F.count(F.lit(1)).alias("n")).collect():
+            counts.setdefault(r["_g"], []).append((r[_BKT], r["n"]))
+        needed: dict[tuple[str, int], dict[int, int]] = {}  # (g,bkt) -> {local: pos}
+        for r in brows:
+            g, runs = r["_g"], sorted(counts[r["_g"]])
+            for pos in sorted(set(positions_for(r["n"]))):
+                run = 0
+                for bkt, cnt in runs:
+                    if pos <= run + cnt:
+                        needed.setdefault((g, bkt), {})[pos - run] = pos
+                        break
+                    run += cnt
+        in_bucket = {
+            (g, bkt): (F.col("_g") == F.lit(g)) & (F.col(_BKT) == F.lit(bkt))
+            for g, bkt in needed
+        }
+        hits = (
+            part.where(_any(list(in_bucket.values())))
+            .withColumn("_rn", F.row_number().over(Window.partitionBy("_g", _BKT).orderBy("_v")))
+            .where(_any([c & F.col("_rn").isin(list(needed[gb])) for gb, c in in_bucket.items()]))
+            .select("_g", _BKT, "_rn", "_v")
+            .collect()
+        )
+        stats: dict[tuple, dict[int, float]] = {gv: {} for gv in gvals.values()}
+        for r in hits:
+            stats[gvals[r["_g"]]][needed[(r["_g"], r[_BKT])][r["_rn"]]] = float(r["_v"])
+        return stats, {gvals[r["_g"]]: r["n"] for r in brows}
     finally:
         vals.unpersist()
 
 
-def _order_statistics_inner(
-    vals: DataFrame, positions: list[int], num_buckets: int
+def _interp_plan(n: int, probs: list[float]) -> list[tuple[int, int, float, float]]:
+    """The ``percentile`` / ``quantile_cont`` interpolation rule for a
+    group of n values: per prob, the 1-indexed order statistics (lo, hi)
+    around the 0-indexed position p = q*(n-1) and their weights
+    (ceil(p)-p, p-floor(p)) — the exact expression tree both Spark's
+    Percentile.getPercentile and DuckDB's quantile_cont evaluate; NOT the
+    algebraically-equal lo+(hi-lo)*frac or 1-frac, which round differently
+    by an ULP for some p (pinned by tests/test_ranks.py)."""
+    plan = []
+    for q in probs:
+        p = q * (n - 1)
+        k = int(p)  # floor for non-negative p
+        plan.append((k + 1, min(k + 2, n), (k + 1) - p, p - k))
+    return plan
+
+
+def _interpolate(
+    plan: list[tuple[int, int, float, float]], at: Callable[[int], float]
+) -> list[float]:
+    """Evaluate an :func:`_interp_plan` given ``at(position) -> value``.
+
+    Equal-collapse parity: Spark's native percentile() aggregates
+    duplicates into (value, count) pairs, so a fractional position
+    straddling two EQUAL values returns the value EXACTLY — while the
+    naive weighted sum w_lo*x + w_hi*x is an ULP off (bit at the 2x
+    replica, where every value is duplicated). Collapse before
+    interpolating so every strategy stays bit-identical to the engine."""
+    out = []
+    for lo, hi, w_lo, w_hi in plan:
+        vlo, vhi = at(lo), at(hi)
+        out.append(vlo if w_hi <= 0.0 or vlo == vhi else w_lo * vlo + w_hi * vhi)
+    return out
+
+
+def _distributed_percentiles(
+    df: DataFrame, group_cols: list[str], col: str, probs: list[float], num_buckets: int
+) -> dict[tuple, list[float]]:
+    """Per-group interpolated percentiles from the selection kernel."""
+    stats, n_by_group = _grouped_order_statistics(
+        df,
+        group_cols,
+        col,
+        lambda n: [x for lo, hi, _, _ in _interp_plan(n, probs) for x in (lo, hi)],
+        num_buckets,
+    )
+    return {
+        g: _interpolate(_interp_plan(n, probs), stats[g].__getitem__)
+        for g, n in n_by_group.items()
+    }
+
+
+def order_statistics(
+    df: DataFrame, col: str, positions: list[int], num_buckets: int = 32
 ) -> dict[int, float]:
-    qs = [i / num_buckets for i in range(1, num_buckets)]
-    [brow] = vals.select(
-        F.percentile_approx("v", F.array(*[F.lit(q) for q in qs])).alias("b")
-    ).collect()
-    boundaries = sorted(set(brow["b"] or []))
-    part = vals.withColumn(_BKT, _bucket_expr(F.col("v"), boundaries))
-    counts = sorted(
-        (r[_BKT], r["n"])
-        for r in part.groupBy(_BKT).agg(F.count(F.lit(1)).alias("n")).collect()
+    """Exact values (cast to double) at the given 1-indexed positions of
+    ``col``'s sorted order (nulls excluded) — the no-group case of the
+    selection kernel :func:`_grouped_order_statistics`. Positions past
+    the row count are absent; empty or all-NULL input returns ``{}``."""
+    stats, _ = _grouped_order_statistics(
+        df.select(F.col(col).cast("double").alias("v")), [], "v",
+        lambda n: positions, num_buckets,
     )
-    needed: dict[int, dict[int, int]] = {}  # bucket -> {local_pos: global_pos}
-    for pos in sorted(set(positions)):
-        run = 0
-        for bkt, n in counts:
-            if pos <= run + n:
-                needed.setdefault(bkt, {})[pos - run] = pos
-                break
-            run += n
-    w = Window.partitionBy(_BKT).orderBy("v")
-    hits = (
-        part.where(F.col(_BKT).isin(list(needed)))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(
-            functools.reduce(
-                lambda a, b: a | b,
-                [
-                    (F.col(_BKT) == F.lit(bkt)) & F.col("_rn").isin(list(locs))
-                    for bkt, locs in needed.items()
-                ],
-            )
-        )
-        .select(_BKT, "_rn", "v")
-        .collect()
-    )
-    return {needed[r[_BKT]][r["_rn"]]: r["v"] for r in hits}
+    return stats.get((), {})
 
 
 def exact_percentiles(
     df: DataFrame, col: str, probs: list[float], num_buckets: int = 32
 ) -> list[float]:
     """Exact linear-interpolated percentiles (the ``percentile`` /
-    ``quantile_cont`` contract: position p = q*(N-1) 0-indexed, result =
-    (ceil(p)-p)*lo + (p-floor(p))*hi — the exact expression tree both
-    Spark's Percentile.getPercentile and DuckDB's quantile_cont evaluate;
-    NOT the algebraically-equal lo+(hi-lo)*frac, which rounds differently
-    by an ULP — pinned by tests/test_ranks.py) computed from distributed
-    order statistics instead of one in-memory sort of the whole column.
-    The value projection is persisted across the count/boundary/count/
-    selection passes and unpersisted before returning (outputs are
-    driver literals; without the cache every pass replays the upstream
-    subtree)."""
+    ``quantile_cont`` contract, :func:`_interp_plan`) of ``col`` cast to
+    double, nulls excluded; NaN per prob for empty or all-NULL input.
+    Below PERCENTILE_BUFFER_MAX_BYTES one ``percentile()`` aggregate;
+    above it distributed order statistics instead of one in-memory sort
+    of the whole column."""
     if _plan_size_bytes(df) <= PERCENTILE_BUFFER_MAX_BYTES:
         qlist = ", ".join(repr(q) for q in probs)
         [row] = df.agg(
@@ -188,40 +316,10 @@ def exact_percentiles(
         return list(row["qs"]) if row["qs"] is not None else [
             float("nan") for _ in probs
         ]
-    vals = (
-        df.select(F.col(col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .persist()
+    res = _distributed_percentiles(
+        df.select(F.col(col).cast("double").alias("v")), [], "v", probs, num_buckets
     )
-    try:
-        n = vals.count()
-        if n == 0:
-            return [float("nan") for _ in probs]
-        wanted: list[tuple[int, int, float, float]] = []
-        positions: set[int] = set()
-        for q in probs:
-            p = q * (n - 1)
-            k = int(p)  # floor for non-negative p
-            lo, hi = k + 1, min(k + 2, n)  # 1-indexed order statistics
-            # Weights as BOTH engines compute them: (ceil-p) and (p-floor),
-            # never 1-frac (an ULP apart for some p).
-            wanted.append((lo, hi, (k + 1) - p, p - k))
-            positions.update((lo, hi))
-        stats = _order_statistics_inner(vals, sorted(positions), num_buckets)
-        # Equal-collapse parity: Spark's native percentile() aggregates
-        # duplicates into (value, count) pairs, so a fractional position
-        # straddling two EQUAL values returns the value EXACTLY — while the
-        # naive weighted sum w_lo*x + w_hi*x is an ULP off (bit at the 2x
-        # replica, where every value is duplicated). Collapse before
-        # interpolating so both strategies stay bit-identical.
-        return [
-            stats[lo]
-            if w_hi <= 0.0 or stats[lo] == stats[hi]
-            else w_lo * stats[lo] + w_hi * stats[hi]
-            for lo, hi, w_lo, w_hi in wanted
-        ]
-    finally:
-        vals.unpersist()
+    return res.get((), [float("nan") for _ in probs])
 
 
 def grouped_exact_percentiles_discrete(
@@ -233,7 +331,7 @@ def grouped_exact_percentiles_discrete(
     aggregation collapses the data to |groups|·|domain| rows, collected,
     and the order statistics fall out of the sorted count runs on the
     driver — no value buffer, no extra passes, exact at any row count.
-    Interpolation uses the engine formula (ceil-p)*lo + (p-floor)*hi.
+    Interpolation uses the engine rule (:func:`_interp_plan`).
 
     The bounded-domain assertion is ENFORCED, not trusted: the collect is
     capped at DISCRETE_COLLECT_MAX_ROWS via limit(cap+1) — a misjudged
@@ -262,7 +360,6 @@ def grouped_exact_percentiles_discrete(
     out: dict[tuple, list[float]] = {}
     for key, vc in runs.items():
         vc.sort()
-        n = sum(c for _, c in vc)
         cum, idx = [], 0
         for v, c in vc:
             idx += c
@@ -274,26 +371,8 @@ def grouped_exact_percentiles_discrete(
                     return v
             return cum[-1][1]
 
-        res = []
-        for q in probs:
-            p = q * (n - 1)
-            k = int(p)
-            lo, hi, w_lo, w_hi = k + 1, min(k + 2, n), (k + 1) - p, p - k
-            vlo, vhi = at(lo), at(hi)
-            # equal-collapse: match Spark percentile()'s count-pair
-            # semantics (see exact_percentiles)
-            res.append(
-                vlo if w_hi <= 0.0 or vlo == vhi else w_lo * vlo + w_hi * vhi
-            )
-        out[key] = res
+        out[key] = _interpolate(_interp_plan(idx, probs), at)
     return out
-
-
-def group_key(*cols: str) -> Column:
-    """The group-key string expression consumers join percentile maps on —
-    identical to the key format grouped_exact_percentiles hashes groups
-    by (unit-separator-joined string casts)."""
-    return F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols])
 
 
 def _spark_str(v) -> str:
@@ -367,28 +446,15 @@ def grouped_exact_percentiles(
 ) -> dict[tuple, list[float]]:
     """Exact per-GROUP interpolated percentiles for the bounded-group /
     huge-rows shape (returnflag, language, priority, scenario, …) —
-    WITHOUT Spark's ``percentile()`` aggregate, whose per-group buffer
-    holds every value of the group and OOMs once groups grow with the
-    data. Same decomposition as :func:`exact_percentiles`, vectorized
-    across groups:
+    WITHOUT Spark's ``percentile()`` aggregate above
+    PERCENTILE_BUFFER_MAX_BYTES, whose per-group buffer holds every value
+    of the group and OOMs once groups grow with the data. The distributed
+    branch is the selection kernel :func:`_grouped_order_statistics`
+    followed by driver-side interpolation with the engine rule.
 
-    1. one pass: per-group approx boundary arrays, collected (the frame
-       is |groups| rows — the bounded axis — and becoming driver
-       literals is what makes the bucket id a pure value function, the
-       determinism requirement from the module docstring);
-    2. one pass: per-(group, bucket) counts (≤ |groups|·buckets rows);
-    3. one pass: ``row_number`` within (group, bucket) partitions —
-       distributed — selecting only the order statistics each group's
-       target positions need;
-    4. driver-side interpolation with the engine formula.
-
-    Returns {group-values-tuple: [percentile per prob]}. Null group keys
-    are not supported (no consumer groups by a nullable key). The value
-    projection is persisted across the operator's three passes and
-    unpersisted before returning (outputs are driver literals; without
-    the cache every pass replays the upstream subtree — a join-heavy
-    input made one consumer 15× slower in the round-5 bench)."""
-    gkey = F.concat_ws("\x1f", *[F.col(g).cast("string") for g in group_cols])
+    Returns {group-values-tuple: [percentile per prob]}; ``{}`` for empty
+    or all-NULL input. Null group keys are not supported (no consumer
+    groups by a nullable key)."""
     if _plan_size_bytes(df) <= PERCENTILE_BUFFER_MAX_BYTES:
         qlist = ", ".join(repr(q) for q in probs)
         rows = (
@@ -400,116 +466,62 @@ def grouped_exact_percentiles(
         return {
             tuple(r[g] for g in group_cols): list(r["qs"]) for r in rows
         }
-    vals = (
-        df.select(
-            gkey.alias("_g"),
-            *[F.col(g).alias(f"_g{i}") for i, g in enumerate(group_cols)],
-            F.col(col).alias("_v"),
-            _as_double(df, F.col(col)).alias("_vd"),
-        )
-        .where(F.col("_v").isNotNull())
-        .persist()
-    )
-    try:
-        return _grouped_exact_percentiles_inner(
-            vals, group_cols, probs, num_buckets
-        )
-    finally:
-        vals.unpersist()
+    return _distributed_percentiles(df, group_cols, col, probs, num_buckets)
 
 
-def _grouped_exact_percentiles_inner(
-    vals: DataFrame,
-    group_cols: list[str],
-    probs: list[float],
-    num_buckets: int,
-) -> dict[tuple, list[float]]:
-    qs = [i / num_buckets for i in range(1, num_buckets)]
-    brows = (
-        vals.groupBy("_g")
-        .agg(
-            F.percentile_approx("_vd", F.array(*[F.lit(q) for q in qs])).alias("b"),
-            F.count(F.lit(1)).alias("n"),
-            *[F.first(f"_g{i}").alias(f"_g{i}") for i in range(len(group_cols))],
+def _prefix_sum(
+    df: DataFrame, key: Column, value: Column, out: str, num_buckets: int
+) -> DataFrame:
+    """:func:`with_prefix_sum` that keeps the bucket column ``_BKT`` (as
+    the first column), so a caller can add windows partitioned by it with
+    no further exchange."""
+    dkey = _as_double(df, key)
+    part = df.withColumn(_BKT, _bucket_expr(dkey, _global_boundaries(df, dkey, num_buckets)))
+    # Bounded frame: at most num_buckets + 1 rows — the one permissible
+    # unpartitioned window in this pattern.
+    offsets = (
+        part.groupBy(_BKT)
+        .agg(F.sum(value).alias("_s"))
+        .select(
+            _BKT,
+            F.coalesce(
+                F.sum("_s").over(
+                    Window.orderBy(_BKT).rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ).alias("_off"),
         )
-        .collect()
     )
-    if not brows:  # empty input: no groups, nothing to rank
-        return {}
-    bounds = {r["_g"]: sorted(set(r["b"])) for r in brows}
-    n_by_g = {r["_g"]: r["n"] for r in brows}
-    gvals = {
-        r["_g"]: tuple(r[f"_g{i}"] for i in range(len(group_cols))) for r in brows
-    }
-    bmap = F.create_map(
-        *[
-            x
-            for g, bs in bounds.items()
-            for x in (F.lit(g), F.array(*[F.lit(b) for b in bs]))
-        ]
+    return (
+        part.withColumn("_run", F.sum(value).over(Window.partitionBy(_BKT).orderBy(key)))
+        .join(F.broadcast(offsets), _BKT)
+        .withColumn(out, F.col("_off") + F.col("_run"))
+        .drop("_run", "_off")
     )
-    part = vals.withColumn(
-        _BKT, F.size(F.filter(F.element_at(bmap, F.col("_g")), lambda b: b < F.col("_vd")))
-    )
-    counts: dict[str, list[tuple[int, int]]] = {}
-    for r in part.groupBy("_g", _BKT).agg(F.count(F.lit(1)).alias("n")).collect():
-        counts.setdefault(r["_g"], []).append((r[_BKT], r["n"]))
-    # per group: positions -> (bucket, local position), as in the global form
-    wanted: dict[str, list[tuple[int, int, float, float]]] = {}
-    needed: dict[tuple[str, int], dict[int, int]] = {}  # (g,bkt) -> {local: pos}
-    for g, n in n_by_g.items():
-        per = []
-        for q in probs:
-            p = q * (n - 1)
-            k = int(p)
-            lo, hi = k + 1, min(k + 2, n)
-            per.append((lo, hi, (k + 1) - p, p - k))
-        wanted[g] = per
-        for pos in sorted({x for lo, hi, _, _ in per for x in (lo, hi)}):
-            run = 0
-            for bkt, cnt in sorted(counts[g]):
-                if pos <= run + cnt:
-                    needed.setdefault((g, bkt), {})[pos - run] = pos
-                    break
-                run += cnt
-    w = Window.partitionBy("_g", _BKT).orderBy("_v")
-    cond = functools.reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("_g") == F.lit(g)) & (F.col(_BKT) == F.lit(bkt))
-            & F.col("_rn").isin(list(locs))
-            for (g, bkt), locs in needed.items()
-        ],
-    )
-    hits = (
-        part.where(
-            functools.reduce(
-                lambda a, b: a | b,
-                [
-                    (F.col("_g") == F.lit(g)) & (F.col(_BKT) == F.lit(bkt))
-                    for (g, bkt) in needed
-                ],
-            )
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(cond)
-        .select("_g", _BKT, "_rn", "_v")
-        .collect()
-    )
-    stats: dict[tuple[str, int], float] = {}
-    for r in hits:
-        stats[(r["_g"], needed[(r["_g"], r[_BKT])][r["_rn"]])] = float(r["_v"])
-    # equal-collapse: match Spark percentile()'s count-pair semantics
-    # (see exact_percentiles)
-    return {
-        gvals[g]: [
-            stats[(g, lo)]
-            if w_hi <= 0.0 or stats[(g, lo)] == stats[(g, hi)]
-            else w_lo * stats[(g, lo)] + w_hi * stats[(g, hi)]
-            for lo, hi, w_lo, w_hi in per
-        ]
-        for g, per in wanted.items()
-    }
+
+
+def with_prefix_sum(
+    df: DataFrame,
+    key: str | Column,
+    value: str | Column,
+    out: str,
+    num_buckets: int = 32,
+) -> DataFrame:
+    """Append column ``out`` holding the inclusive running total of
+    ``value`` in ascending ``key`` order — ``SUM(v) OVER (ORDER BY key)``
+    — computed with the range-bucketed decomposition (per-bucket sums ->
+    offsets over the bounded bucket frame -> broadcast back, plus a
+    within-bucket running sum) instead of a single-partition window.
+
+    Ties on ``key`` follow SQL RANGE-frame semantics (all peers of a key
+    value share the sum through the last peer), because tied keys land
+    in one bucket by construction and the within-bucket window uses the
+    default RANGE frame. The sum's result type follows Spark's ``sum``
+    (BIGINT stays BIGINT: integer weights keep the total exact).
+    """
+    k = F.col(key) if isinstance(key, str) else key
+    v = F.col(value) if isinstance(value, str) else value
+    return _prefix_sum(df, k, v, out, num_buckets).drop(_BKT)
 
 
 def with_avg_rank(
@@ -517,46 +529,20 @@ def with_avg_rank(
 ) -> DataFrame:
     """Append column ``out`` holding the exact AVERAGE (fractional) rank of
     ``col`` — ``RANK() + (tie_count - 1)/2``, the standard Spearman tie
-    treatment — computed with the range-bucketed decomposition above
-    instead of a single-task global window. Null keys rank first (Spark
-    ascending NULLS FIRST default)."""
+    treatment — without a single-task global window. Null keys rank first
+    (Spark ascending NULLS FIRST default).
+
+    The prefix sum of 1 through a key's last peer is ``RANK() + tie_count
+    - 1``, so the average rank is that sum minus ``(tie_count - 1)/2``.
+    The tie window is partitioned by (bucket, key): ties share a bucket,
+    and the prefix sum's bucket partitioning already satisfies it, where
+    partitioning by the key alone would add an exchange per call."""
     key = F.col(col) if isinstance(col, str) else col
-    dkey = _as_double(df, key)
-    qs = [i / num_buckets for i in range(1, num_buckets)]
-    # One tiny driver round-trip: boundary literals shared by every branch.
-    [row] = df.select(
-        F.percentile_approx(dkey, F.array(*[F.lit(q) for q in qs])).alias("b")
-    ).collect()
-    boundaries = sorted(set(row["b"] or []))
-    part = df.withColumn(_BKT, _bucket_expr(dkey, boundaries))
-    # Bounded frame: at most num_buckets + 1 rows — the one permissible
-    # unpartitioned window in this pattern.
-    offsets = (
-        part.groupBy(_BKT)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            _BKT,
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy(_BKT).rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("_off"),
-        )
-    )
-    w_rank = Window.partitionBy(_BKT).orderBy(key)
-    w_tie = Window.partitionBy(_BKT, key)
     return (
-        part.withColumn("_rk", F.rank().over(w_rank))
-        .withColumn("_tc", F.count(F.lit(1)).over(w_tie))
-        .join(F.broadcast(offsets), _BKT)
-        .withColumn(
-            out,
-            F.col("_off") + F.col("_rk") + (F.col("_tc") - F.lit(1)) / F.lit(2.0),
-        )
-        .drop(_BKT, "_rk", "_tc", "_off")
+        _prefix_sum(df, key, F.lit(1), "_ps", num_buckets)
+        .withColumn("_tc", F.count(F.lit(1)).over(Window.partitionBy(_BKT, key)))
+        .withColumn(out, F.col("_ps") - (F.col("_tc") - F.lit(1)) / F.lit(2.0))
+        .drop(_BKT, "_ps", "_tc")
     )
 
 
@@ -631,11 +617,7 @@ def grouped_weighted_median_df(
     # one bounded collect: the 1-row boundary literals (load balance only —
     # a returned-DataFrame operator must not own persist/unpersist lifetime,
     # so the plan below re-derives vals; AQE reuses the shuffle where it can)
-    qs = [i / num_buckets for i in range(1, num_buckets)]
-    [brow] = vals.select(
-        F.percentile_approx("_vd", F.array(*[F.lit(q) for q in qs])).alias("b")
-    ).collect()
-    boundaries = sorted(set(brow["b"] or []))
+    boundaries = _global_boundaries(vals, F.col("_vd"), num_buckets)
     part = vals.withColumn(_BKT, _bucket_expr(F.col("_vd"), boundaries))
     bw = part.groupBy(*gcols, _BKT).agg(F.sum("_w").cast("long").alias("_bw"))
     # crossing-bucket location: windows over the bounded <= num_buckets

@@ -2362,13 +2362,13 @@ def systematic_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-weighted document sample in one pass): N midpoint probes on
     the cumulative-weight line, each drawing the document whose interval
     it lands in. The global running total comes from
-    ``operators.scan.with_prefix_sum`` — the range-bucketed distributed
+    ``ranks.with_prefix_sum`` — the range-bucketed distributed
     prefix sum (bucket offsets over a bounded frame + local cumsum), so
     no single-partition window ever sees the corpus. Draw counts are the
     difference of the exact integer probe-counting function at the
     interval's two ends; the two corpus scalars ride a 1-row broadcast.
     Output is the drawn documents only (≤ N rows)."""
-    from ..operators.scan import with_prefix_sum
+    from ..operators.ranks import with_prefix_sum
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").alias("weight")

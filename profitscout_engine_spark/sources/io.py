@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .txn import _merge_frames, _partition_filter
+
 
 # --- readers ------------------------------------------------------------------
 def read_table(spark: SparkSession, path: str, view: str | None = None) -> DataFrame:
@@ -170,33 +172,16 @@ def merge_upsert(
     inserted (WHEN NOT MATCHED). When ``partition_col`` is given, only
     partitions containing source keys are read+rewritten (partition
     pruning — at 100 TB you rewrite the touched days, not the table);
-    the rewrite then goes through the dynamic-overwrite path (S10).
+    the rewrite then goes through the dynamic-overwrite path (S10). The
+    row rules and the NULL-aware partition filter are the ones
+    :func:`.txn.merge_upsert_txn` commits with: a touched NULL partition
+    is read back too, because the overwrite replaces it.
     """
     target = spark.read.parquet(target_path)
     if partition_col:
-        days = [r[0] for r in source.select(partition_col).distinct().collect()]
-        target = target.where(F.col(partition_col).isin(days))
-
-    src = source.select(
-        *[F.col(k).alias(f"_k_{k}") for k in keys],
-        *[
-            F.col(c).alias(f"_s_{c}")
-            for c in source.columns
-            if c not in keys
-        ],
-    )
-    cond = [F.col(k) == F.col(f"_k_{k}") for k in keys]
-    joined = target.join(src, on=cond, how="full")
-
-    merged_cols = []
-    for c in target.columns:
-        if c in keys:
-            merged_cols.append(F.coalesce(F.col(c), F.col(f"_k_{c}")).alias(c))
-        elif f"_s_{c}" in joined.columns:
-            merged_cols.append(F.coalesce(F.col(f"_s_{c}"), F.col(c)).alias(c))
-        else:
-            merged_cols.append(F.col(c))
-    merged = joined.select(*merged_cols)
+        touched = [r[0] for r in source.select(partition_col).distinct().collect()]
+        target = target.where(_partition_filter(partition_col, touched))
+    merged = _merge_frames(target, source, keys)
 
     if partition_col:
         overwrite_day_partition(merged, target_path, partition_col)

@@ -141,6 +141,14 @@ def commit_snapshot(
         w = w.partitionBy(partition_col)
     w.parquet(staging)
 
+    return _publish(root, staging, new_v, expected_version)
+
+
+def _publish(root: str, staging: str, new_v: int, expected_version: int | None) -> int:
+    """Re-check the base version, move the staged snapshot dir into place
+    as ``v_{new_v}`` and atomically flip the pointer to it — the one
+    publish sequence of every commit. ``expected_version=None`` skips the
+    re-check (blind overwrite)."""
     # Re-check-and-flip. A true CAS needs a lock/conditional-put; plain
     # POSIX gives us: the pointer flip itself is atomic (os.replace), and
     # the window between this check and the flip is the residual race —
@@ -155,6 +163,7 @@ def commit_snapshot(
     # an orphaned v_{new_v} dir; it was never referenced by the pointer, so
     # it is invisible to readers and safe to clear (otherwise this rename
     # fails ENOTEMPTY and wedges the table).
+    final = snapshot_path(root, new_v)
     if os.path.exists(final):
         shutil.rmtree(final)
     os.rename(staging, final)
@@ -308,20 +317,7 @@ def _commit_partition_delta(
         for fname in os.listdir(src_dir):
             if fname.endswith(".parquet"):
                 os.link(os.path.join(src_dir, fname), os.path.join(dst_dir, fname))
-
-    if current_version(root) != base:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ConcurrentCommitError(f"table {root!r} advanced during staging (expected v{base})")
-    if os.path.exists(final):  # orphan from a crash between rename and flip
-        shutil.rmtree(final)
-    os.rename(staging, final)
-    tmp_ptr = _pointer_path(root) + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp_ptr, "w") as f:
-        f.write(f"v_{new_v:08d}")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_ptr, _pointer_path(root))
-    return new_v
+    return _publish(root, staging, new_v, base)
 
 
 def compact_snapshot(

@@ -72,6 +72,27 @@ def test_merge_upsert_partition_pruned(spark, tmp_path, ledger):
     assert out.where(F.col("scan_date") == D1).count() == 2  # day not rewritten
 
 
+def test_merge_upsert_keeps_null_partition_rows(spark, tmp_path):
+    """A touched NULL partition is read back before the dynamic overwrite
+    replaces it, so its unmatched rows survive — the same rows the
+    transactional MERGE commits on the same input."""
+    from profitscout_engine_spark.sources import txn
+
+    schema = "k string, day date, v int"
+    base = spark.createDataFrame([("A", None, 1), ("B", None, 2), ("C", D1, 3)], schema)
+    source = spark.createDataFrame([("A", None, 10)], schema)
+    path = str(tmp_path / "t")
+    base.write.partitionBy("day").parquet(path)
+    io.merge_upsert(spark, path, source, keys=["k"], partition_col="day")
+    got = {(r.k, r.day, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {("A", None, 10), ("B", None, 2), ("C", D1, 3)}
+
+    root = str(tmp_path / "vtable")
+    txn.commit_snapshot(base, root, partition_col="day")
+    txn.merge_upsert_txn(spark, root, source, keys=["k"], partition_col="day")
+    assert got == {(r.k, r.day, r.v) for r in txn.read_versioned(spark, root).collect()}
+
+
 def test_append_evolving_schema_union(spark, tmp_path):
     path = str(tmp_path / "t")
     io.append_rows(spark.createDataFrame([(1, "x")], "id long, a string"), path)

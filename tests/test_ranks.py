@@ -101,6 +101,24 @@ def test_exact_percentiles_vs_single_buffer(spark, sf_dir, monkeypatch):
     assert exact_percentiles(li, "l_extendedprice", probs) == row["qs"]
 
 
+def test_distributed_kernel_empty_and_all_null_input(spark, monkeypatch):
+    """The distributed selection kernel on empty and all-NULL frames:
+    exact_percentiles keeps its NaN-per-prob contract, order_statistics
+    and grouped_exact_percentiles return no groups."""
+    import math
+
+    import profitscout_engine_spark.operators.ranks as ranks
+
+    monkeypatch.setattr(ranks, "PERCENTILE_BUFFER_MAX_BYTES", -1)
+    empty = spark.createDataFrame([], "g string, v double")
+    nulls = spark.createDataFrame([("a", None), ("b", None)], "g string, v double")
+    for df in (empty, nulls):
+        got = exact_percentiles(df, "v", [0.25, 0.5])
+        assert len(got) == 2 and all(math.isnan(x) for x in got)
+        assert order_statistics(df, "v", [1, 2]) == {}
+        assert grouped_exact_percentiles(df, ["g"], "v", [0.5]) == {}
+
+
 def test_chrono_split_matches_ntile_twin(spark, sf_dir):
     """Differential twin: the distributed cutoff split == NTILE(2) over the
     (date, key) global window, per the oracle's tie semantics."""

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from profitscout_engine_spark.operators.scan import with_prefix_sum
+from profitscout_engine_spark.operators.ranks import with_prefix_sum
 from profitscout_engine_spark.queries import load_registry
 from profitscout_engine_spark.queries._util import t
 
