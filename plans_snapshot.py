@@ -4,14 +4,17 @@ changes:
 
     python plans_snapshot.py
 
-Snapshot semantics (VERDICT r6 item 4): every query is planned with the
-session cache CLEARED immediately before its build, so the flags always
-describe the full underlying Catalyst plan — never an order-dependent
-``InMemoryTableScan`` stub standing in for whatever an earlier query
-happened to persist.  ``catalog.clearCache()`` works because CacheManager
-substitution is resolved at planning time, not baked into the DataFrame.
-This makes the snapshot deterministic and lets the plan-hygiene gates cover
-the shared-frame ANN/dedup family, previously skipped as cache-dependent.
+Snapshot semantics (VERDICT r6 item 4): every query is captured by
+``plans.capture_plan``, which clears the shared-frame memo and the session
+cache immediately before the build, so the flags always describe the full
+underlying Catalyst plan — never an order-dependent ``InMemoryTableScan``
+stub standing in for whatever an earlier query happened to persist.
+``catalog.clearCache()`` works because CacheManager substitution is
+resolved at planning time, not baked into the DataFrame. This makes the
+snapshot deterministic and lets the plan-hygiene gates cover the
+shared-frame ANN/dedup family, previously skipped as cache-dependent.
+``python -m profitscout_engine_spark explain <query>`` runs the same
+capture for one query.
 
 The run is sharded across worker subprocesses (fresh JVM each): one long
 clear-and-rebuild session accumulates enough plan/broadcast state to OOM
@@ -36,31 +39,23 @@ CHUNK = 32
 
 def worker(names: list[str], out_path: str) -> None:
     from profitscout_engine_spark.plans import (
+        CAPTURE_MASTER,
         CAPTURE_SHUFFLE_PARTITIONS,
-        explain_str,
+        capture_plan,
         normalized_plan_sha,
         plan_flags,
     )
     from profitscout_engine_spark.queries import load_registry
     from profitscout_engine_spark.session import get_spark
 
-    from profitscout_engine_spark.queries._util import reset_shared
-
-    spark = get_spark(master="local[8]", shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
+    spark = get_spark(master=CAPTURE_MASTER, shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
     reg = load_registry()
     flags: dict[str, dict] = {}
     skipped: dict[str, str] = {}
     for name in names:
         try:
-            # Pristine state per capture: drop the session-shared frame memo
-            # AND the cache registry, so the recorded plan is independent of
-            # which queries shared this worker's chunk (see reset_shared).
-            reset_shared()
-            spark.catalog.clearCache()
-            df = reg[name].fn(spark, SF)
-            f = plan_flags(df)
-            f["plan_sha"] = normalized_plan_sha(explain_str(df))
-            flags[name] = f
+            plan = capture_plan(spark, reg[name].fn, SF)
+            flags[name] = {**plan_flags(plan), "plan_sha": normalized_plan_sha(plan)}
         except Exception as exc:  # noqa: BLE001 — record and move on
             skipped[name] = f"{type(exc).__name__}: {exc}"[:200]
     json.dump({"flags": flags, "skipped": skipped}, open(out_path, "w"))

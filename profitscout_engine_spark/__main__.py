@@ -3,10 +3,12 @@
     python -m profitscout_engine_spark list [substring]
     python -m profitscout_engine_spark run <query> [--sf-dir DIR] [--limit N]
     python -m profitscout_engine_spark explain <query> [--sf-dir DIR]
-    python -m profitscout_engine_spark bench <query> [--sf-dir DIR] [--n N]
 
-`run` prints the result (bounded by --limit), `explain` the formatted
-physical plan plus the plan-hygiene flags, `bench` best-of-N wall time.
+`run` prints the result (bounded by --limit); `explain` prints the formatted
+physical plan, its plan-hygiene flags and its normalized ``plan_sha``,
+captured the way plans_snapshot.py captures PLANS.json (clear-first, pinned
+shuffle count, ``plans.CAPTURE_MASTER``), so at PLANS.json's ``sf_dir`` the
+flags and sha are the snapshot's. Single-query timing is isolate_time.py.
 The same registry the grading driver sees (`__spark_entry__.queries()`),
 so anything runnable here is driver-runnable and vice versa.
 """
@@ -26,7 +28,7 @@ def main(argv: list[str] | None = None) -> int:
     p_list = sub.add_parser("list", help="list registered queries")
     p_list.add_argument("substring", nargs="?", default="")
 
-    for name in ("run", "explain", "bench"):
+    for name in ("run", "explain"):
         p = sub.add_parser(name)
         p.add_argument("query")
         p.add_argument(
@@ -35,8 +37,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         if name == "run":
             p.add_argument("--limit", type=int, default=20)
-        if name == "bench":
-            p.add_argument("--n", type=int, default=2)
 
     args = ap.parse_args(argv)
 
@@ -58,33 +58,28 @@ def main(argv: list[str] | None = None) -> int:
 
     from .session import get_spark
 
-    spark = get_spark(app_name=f"pse-{args.cmd}-{args.query}")
     fn = registry[args.query].fn
-
-    if args.cmd == "run":
-        df = fn(spark, args.sf_dir)
-        t0 = time.time()
-        df.show(args.limit, truncate=40)
-        n = df.count()
-        print(f"{n} rows in {time.time() - t0:.2f}s (showing up to {args.limit})")
-        return 0
-
     if args.cmd == "explain":
-        from .plans import explain_str, plan_flags
+        from .plans import (
+            CAPTURE_MASTER,
+            capture_plan,
+            normalized_plan_sha,
+            plan_flags,
+        )
 
-        df = fn(spark, args.sf_dir)
-        print(explain_str(df))
-        print("plan flags:", plan_flags(df))
+        spark = get_spark(app_name=f"pse-explain-{args.query}", master=CAPTURE_MASTER)
+        plan = capture_plan(spark, fn, args.sf_dir)
+        print(plan)
+        print("plan flags:", plan_flags(plan))
+        print("plan_sha:", normalized_plan_sha(plan))
         return 0
 
-    # bench
-    best = None
-    for _ in range(args.n):
-        t0 = time.time()
-        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    print(f"{args.query}: best-of-{args.n} {best:.3f}s at {args.sf_dir}")
+    spark = get_spark(app_name=f"pse-run-{args.query}")
+    df = fn(spark, args.sf_dir)
+    t0 = time.time()
+    df.show(args.limit, truncate=40)
+    n = df.count()
+    print(f"{n} rows in {time.time() - t0:.2f}s (showing up to {args.limit})")
     return 0
 
 

@@ -3,9 +3,12 @@
 The 100 TB design rules, written as assertions over Catalyst's formatted
 output: filters/projections must reach the parquet scan, small dims must
 broadcast, pair generators must never cartesian-product, Python must stay
-out of hot paths. Used by tests/test_plans.py and runnable standalone:
+out of hot paths. Every plan the repo reads is rendered by
+:func:`explain_str`; :func:`capture_plan` is the clear-first capture behind
+PLANS.json (plans_snapshot.py) and the CLI, which prints one query's plan,
+flags and normalized ``plan_sha``:
 
-    python -m profitscout_engine_spark.plans.report
+    python -m profitscout_engine_spark explain <query> [--sf-dir DIR]
 """
 
 from __future__ import annotations
@@ -13,21 +16,43 @@ from __future__ import annotations
 import contextlib
 import io
 import threading
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# Shuffle partitions every plan capture pins (plans_snapshot.py,
-# plans_capture.py). Captured plan text embeds the count — hashpartitioning(…, N)
-# — so PLANS.json plan shas, and the DRIVER_STATE hashes built on them, are
-# only comparable across captures taken at one fixed N, whatever the
-# capturing session's task-slot default is.
+# Shuffle partitions every capture_plan() call pins. Captured plan text
+# embeds the count — hashpartitioning(…, N) — so PLANS.json plan shas, and
+# the DRIVER_STATE hashes built on them, are only comparable across captures
+# taken at one fixed N, whatever the capturing session's task-slot default is.
 CAPTURE_SHUFFLE_PARTITIONS = 32
+# Master of every capturing session (plans_snapshot.py workers, the CLI
+# explain): the task-slot count reaches plan text too, through fan_out's
+# round-robin repartition(defaultParallelism).
+CAPTURE_MASTER = "local[8]"
 
-# Capture calls mutate the session-global maxPlanStringLength; concurrent
+# explain_str() mutates the session-global maxPlanStringLength; concurrent
 # captures (or an action racing a capture) could interleave save/restore and
 # strand the cap at 2^31-16, silently re-enabling full per-action plan
 # rendering for the rest of the session (ADVICE r11). One capture at a time.
 _EXPLAIN_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def _pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set a session conf for the duration of the block, then restore (or
+    unset) the previous value."""
+    try:
+        old = spark.conf.get(key)
+    except Exception:
+        old = None
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -39,24 +64,42 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     every plan GATE flows through this function and must see the complete,
     untruncated plan — a silently truncated capture would turn the flag
     snapshot and the plan-sha operator-edit detector into no-ops."""
-    spark = df.sparkSession
-    key = "spark.sql.maxPlanStringLength"
-    with _EXPLAIN_LOCK:
-        try:
-            old = spark.conf.get(key)
-        except Exception:
-            old = None
-        spark.conf.set(key, str(2**31 - 16))
-        try:
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain(mode)
-            return buf.getvalue()
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+    with _EXPLAIN_LOCK, _pinned_conf(
+        df.sparkSession, "spark.sql.maxPlanStringLength", str(2**31 - 16)
+    ):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain(mode)
+        return buf.getvalue()
+
+
+def capture_plan(
+    spark: SparkSession, build: Callable[[SparkSession, str], DataFrame], sf_dir: str
+) -> str:
+    """The clear-first capture: ``build(spark, sf_dir)``'s formatted plan,
+    built from a pristine session at CAPTURE_SHUFFLE_PARTITIONS.
+
+    The cache registry AND the session-shared frame memo are dropped first
+    (see ``queries._util.reset_shared``), so the plan is the full underlying
+    Catalyst plan — never an order-dependent ``InMemoryTableScan`` stub of
+    whatever an earlier build happened to persist — and does not depend on
+    which queries the session planned before. The shuffle count is pinned
+    around the build too, because iterative builds run their eager rounds
+    (and size their checkpoints) while building."""
+    from ..queries._util import reset_shared
+
+    # clearCache() BEFORE the memo's per-frame unpersist(): unpersisting a
+    # frame that other cache entries are built on makes Spark re-plan each
+    # of those entries (CacheManager.recacheByCondition), and re-optimizing
+    # the nested shared-frame chains runs Catalyst constraint inference
+    # for minutes on a 12 GB heap. With the registry already empty, every
+    # unpersist() is a no-op.
+    spark.catalog.clearCache()
+    reset_shared()
+    with _pinned_conf(
+        spark, "spark.sql.shuffle.partitions", str(CAPTURE_SHUFFLE_PARTITIONS)
+    ):
+        return explain_str(build(spark, sf_dir))
 
 
 def pushed_filters(plan: str) -> str:
@@ -238,9 +281,8 @@ def count_unpartitioned_windows(plan: str) -> int:
     return n
 
 
-def plan_flags(df: DataFrame) -> dict[str, bool | int]:
-    """Structural quality signals for one query plan."""
-    plan = explain_str(df)
+def plan_flags(plan: str) -> dict[str, bool | int]:
+    """Structural quality signals of one formatted plan (explain_str)."""
     return {
         "pushed_filters": "PushedFilters: []" not in plan and "PushedFilters:" in plan,
         "broadcast_joins": plan.count("BroadcastHashJoin"),

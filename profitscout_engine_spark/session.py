@@ -132,8 +132,9 @@ def _apply_runtime_confs(spark: SparkSession) -> None:
     # it is the documented remedy for giant-plan driver overhead (guide
     # §7.3) and scales: at 100 TB the trees are the same size, the cluster
     # just waits on the driver longer. Plan-quality gates are unaffected:
-    # explain_str() (the one capture chokepoint for PLANS.json / DRIVER_STATE
-    # / plans_capture.py) lifts the cap around its explain call.
+    # explain_str() (the one renderer of every plan the repo reads: PLANS.json,
+    # DRIVER_STATE, the CLI explain, the plan tests) lifts the cap around its
+    # explain call.
     spark.conf.set("spark.sql.maxPlanStringLength", "4096")
     # Serve bare MIN/MAX/COUNT aggregations from parquet footer statistics
     # instead of scanning data pages (off by default; pure win for the

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .txn import _merge_frames, _partition_filter
+from .txn import _merge_frames, _partition_filter, _prunable_partitions
 
 
 # --- readers ------------------------------------------------------------------
@@ -173,21 +173,29 @@ def merge_upsert(
     partitions containing source keys are read+rewritten (partition
     pruning — at 100 TB you rewrite the touched days, not the table);
     the rewrite then goes through the dynamic-overwrite path (S10). The
-    row rules and the NULL-aware partition filter are the ones
-    :func:`.txn.merge_upsert_txn` commits with: a touched NULL partition
-    is read back too, because the overwrite replaces it.
+    row rules, the NULL-aware partition filter and the cross-partition key
+    probe are the ones :func:`.txn.merge_upsert_txn` commits with: a
+    touched NULL partition is read back too, because the overwrite
+    replaces it, and a source key that moves partitions makes the merge
+    rewrite the whole table (every partition, static overwrite).
     """
     target = spark.read.parquet(target_path)
-    if partition_col:
-        touched = [r[0] for r in source.select(partition_col).distinct().collect()]
-        target = target.where(_partition_filter(partition_col, touched))
-    merged = _merge_frames(target, source, keys)
-
-    if partition_col:
+    touched = (
+        _prunable_partitions(target, source, keys, partition_col) if partition_col else None
+    )
+    if touched is not None:
+        merged = _merge_frames(
+            target.where(_partition_filter(partition_col, touched)), source, keys
+        )
         overwrite_day_partition(merged, target_path, partition_col)
-    else:
-        staged = merged.localCheckpoint()  # cut lineage off the path being replaced
-        staged.write.mode("overwrite").parquet(target_path)
+        return
+    # cut lineage off the path being replaced
+    staged = _merge_frames(target, source, keys).localCheckpoint()
+    w = staged.write.mode("overwrite")
+    if partition_col:
+        # static: a partition the moved keys emptied must go too
+        w = w.option("partitionOverwriteMode", "static").partitionBy(partition_col)
+    w.parquet(target_path)
 
 
 def ctas(spark: SparkSession, sql: str, path: str) -> DataFrame:

@@ -196,6 +196,32 @@ def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> Data
     return joined.select(*merged_cols)
 
 
+def _prunable_partitions(
+    target: DataFrame, source: DataFrame, keys: list[str], partition_col: str
+) -> list | None:
+    """The partition values a merge of ``source`` into ``target`` touches,
+    or None when pruning the merge to them would be unsound.
+
+    Pruning is only sound when a key cannot move between partitions. With
+    ``partition_col`` in ``keys`` that holds by construction. Otherwise a
+    source row could match a target row living in an UNTOUCHED partition
+    (which a pruned merge would keep unchanged while the source row
+    inserts — duplicate keys), so the untouched partitions are probed for
+    cross-partition key matches first: a read-only key-column semi-join,
+    scan pruned to the key columns. Any match means a full-table merge."""
+    touched = [r[0] for r in source.select(partition_col).distinct().collect()]
+    if partition_col not in keys:
+        untouched = ~F.coalesce(_partition_filter(partition_col, touched), F.lit(False))
+        crossers = (
+            target.where(untouched)
+            .select(*keys)
+            .join(source.select(*keys).distinct(), on=keys, how="left_semi")
+        )
+        if crossers.limit(1).count() > 0:
+            return None
+    return touched
+
+
 def merge_upsert_txn(
     spark: SparkSession,
     root: str,
@@ -218,37 +244,25 @@ def merge_upsert_txn(
     a metadata operation, no data copied, safe precisely because
     snapshot files are immutable. This is the 100 TB shape: merging one
     day into a year-partitioned table stages one day, links the rest.
-
-    Pruning is only sound when a key cannot move between partitions. With
-    ``partition_col`` in ``keys`` that holds by construction. Otherwise a
-    source row could match a target row living in an UNTOUCHED partition
-    (which would be hard-linked through unchanged while the source row
-    inserts — duplicate keys), so this function first probes the
-    untouched partitions for cross-partition key matches (a read-only
-    key-column semi-join, scan pruned to the key columns) and falls back
-    to the full-table merge when any exist.
+    When a source key moves partitions (see :func:`_prunable_partitions`)
+    the merge falls back to the full-table rewrite.
     """
     base = current_version(root)
     target = read_versioned(spark, root)
     if partition_col is None:
         return commit_snapshot(_merge_frames(target, source, keys), root, expected_version=base)
 
-    touched = [r[0] for r in source.select(partition_col).distinct().collect()]
-    part_cond = _partition_filter(partition_col, touched)
-    if partition_col not in keys:
-        crossers = (
-            target.where(~F.coalesce(part_cond, F.lit(False)))
-            .select(*keys)
-            .join(source.select(*keys).distinct(), on=keys, how="left_semi")
+    touched = _prunable_partitions(target, source, keys, partition_col)
+    if touched is None:
+        return commit_snapshot(
+            _merge_frames(target, source, keys),
+            root,
+            expected_version=base,
+            partition_col=partition_col,
         )
-        if crossers.limit(1).count() > 0:
-            return commit_snapshot(
-                _merge_frames(target, source, keys),
-                root,
-                expected_version=base,
-                partition_col=partition_col,
-            )
-    merged = _merge_frames(target.where(part_cond), source, keys)
+    merged = _merge_frames(
+        target.where(_partition_filter(partition_col, touched)), source, keys
+    )
     return _commit_partition_delta(merged, root, base, partition_col, touched)
 
 

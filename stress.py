@@ -20,7 +20,8 @@ one-buffer aggregate grows worse and eventually OOMs.
 Timing mode is perf-only (replicated bytes never feed a correctness
 claim); --check mode IS a correctness claim — it closes the ">sf0.1
 float/ANSI traps" gap the missing sf1 fixture leaves open, by running
-the full driver-style oracle compare over the 8x key-shifted replica.
+sweep.py's driver-style oracle compare (``sweep.oracle_sweep``) over the
+8x key-shifted replica.
 Group-size-dependent accumulations (percentile interpolation, moment
 sums, windowed cumulations, 2dp rounding of float group sums) see 8x
 longer runs there than any shipped fixture exercises.
@@ -217,45 +218,6 @@ CHECK_QUERIES = [
 ]
 
 
-def check_correctness(spark, reg, names: list[str], big: str, k: int) -> int:
-    """Driver-style oracle compare AT THE REPLICATED SCALE: DuckDB views over
-    the Kx parquet, exact value compare through tests/conftest's comparator
-    (the same typed-dtype + exact-value gate the local sweeps use)."""
-    from tests.conftest import assert_frames_match
-
-    con = duckdb.connect()
-    for tbl in SHIFTS:
-        if os.path.exists(f"{big}/{tbl}.parquet"):
-            con.sql(
-                f"CREATE VIEW {tbl} AS SELECT * FROM '{big}/{tbl}.parquet'"
-            )
-    failed = []
-    for name in names:
-        spec = reg[name]
-        if spec.oracle is None:
-            print(f"  {name:28s} SKIP (rows-only by design)", flush=True)
-            continue
-        t0 = time.monotonic()
-        try:
-            sdf = spec.fn(spark, big).toPandas()
-            odf = con.sql(spec.oracle).df()
-            assert_frames_match(sdf, odf, name)
-            print(
-                f"  {name:28s} EXACT at {k}x ({len(sdf)} rows, "
-                f"{time.monotonic() - t0:5.1f}s)",
-                flush=True,
-            )
-        except Exception as exc:  # noqa: BLE001 — report every failure
-            failed.append(name)
-            msg = str(exc).splitlines()[0][:160]
-            print(f"  {name:28s} FAIL at {k}x: {msg}", flush=True)
-    print(
-        f"check mode: {len(names) - len(failed)}/{len(names)} exact at {k}x"
-        + (f"; FAILED: {failed}" if failed else "")
-    )
-    return 1 if failed else 0
-
-
 def build_replica(k: int) -> str:
     out = f"{STAGE}_x{k}"
     # Marker carries the source fixture's identity (size+mtime of the
@@ -310,7 +272,9 @@ def main() -> int:
     big = build_replica(k)
     spark = get_spark()
     if check:
-        return check_correctness(spark, reg, names, big, k)
+        from sweep import oracle_sweep
+
+        return 1 if oracle_sweep(spark, {n: reg[n] for n in names}, big) else 0
     results = {}
     for name in names:
         reg[name].fn(spark, BASE).count()  # warm-up: JIT/codegen/IO cache

@@ -27,6 +27,39 @@ from tests.conftest import assert_frames_match
 SF_DIR = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.01")
 
 
+def oracle_sweep(spark, registry: dict, sf_dir: str) -> list[str]:
+    """Run every query in ``registry`` and its DuckDB oracle over ``sf_dir``'s
+    parquet tables, compare them with the pytest gate's comparator, print
+    one verdict per query and a summary; return the names that failed."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    n_pass = n_rows_only = 0
+    failures: list[str] = []
+    for name, spec in registry.items():
+        t0 = time.time()
+        try:
+            sdf = spec.fn(spark, sf_dir).toPandas()
+            if spec.oracle is None:
+                assert len(sdf.columns) > 0
+                n_rows_only += 1
+                print(f"  rows-only {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)", flush=True)
+                continue
+            odf = con.sql(spec.oracle).df()
+            assert_frames_match(sdf, odf, name)
+            n_pass += 1
+            print(f"  ok        {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)", flush=True)
+        except Exception:
+            failures.append(name)
+            print(f"  FAIL      {name}", flush=True)
+            traceback.print_exc(limit=3)
+    print(
+        f"\n{n_pass} exact + {n_rows_only} rows-only / {len(registry)} at {sf_dir}; "
+        f"{len(failures)} failed{': ' + ', '.join(failures) if failures else ''}"
+    )
+    return failures
+
+
 def main() -> int:
     names = sys.argv[1:]
     registry = load_registry()
@@ -37,33 +70,7 @@ def main() -> int:
             return 2
         registry = {n: registry[n] for n in names}
     spark = get_spark(master=os.environ.get("SWEEP_MASTER", "local[8]"))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    n_pass = n_rows_only = 0
-    failures: list[str] = []
-    for name, spec in registry.items():
-        t0 = time.time()
-        try:
-            sdf = spec.fn(spark, SF_DIR).toPandas()
-            if spec.oracle is None:
-                assert len(sdf.columns) > 0
-                n_rows_only += 1
-                print(f"  rows-only {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
-                continue
-            odf = con.sql(spec.oracle).df()
-            assert_frames_match(sdf, odf, name)
-            n_pass += 1
-            print(f"  ok        {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
-        except Exception:
-            failures.append(name)
-            print(f"  FAIL      {name}")
-            traceback.print_exc(limit=3)
-    print(
-        f"\n{n_pass} exact + {n_rows_only} rows-only / {len(registry)} at {SF_DIR}; "
-        f"{len(failures)} failed{': ' + ', '.join(failures) if failures else ''}"
-    )
-    return 1 if failures else 0
+    return 1 if oracle_sweep(spark, registry, SF_DIR) else 0
 
 
 if __name__ == "__main__":

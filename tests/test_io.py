@@ -337,8 +337,7 @@ def test_zorder_layout_skips_files_on_secondary_column(spark, tmp_path):
 def test_orc_round_trip_with_pushdown(spark, sf_dir, tmp_path):
     """ORC round trip: values identical to the parquet source, and the
     ORC scan carries the same predicate pushdown parquet gets."""
-    import contextlib
-    import io as _io
+    from profitscout_engine_spark.plans import explain_str
 
     src = spark.read.parquet(f"{sf_dir}/orders.parquet")
     path = str(tmp_path / "orders_orc")
@@ -349,10 +348,7 @@ def test_orc_round_trip_with_pushdown(spark, sf_dir, tmp_path):
     b = sorted(map(tuple, back.select("o_orderkey", "o_totalprice").collect()))
     assert a == b
 
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.where("o_totalprice > 100000").select("o_orderkey").explain("formatted")
-    plan = buf.getvalue()
+    plan = explain_str(back.where("o_totalprice > 100000").select("o_orderkey"))
     assert "PushedFilters:" in plan and "o_totalprice" in plan.split("PushedFilters:")[1].split("\n")[0]
 
 

@@ -48,14 +48,13 @@ def test_snapshot_covers_registry():
 def test_plan_flags_match_snapshot(name, spark, sf_dir):
     if sf_dir != SNAP["sf_dir"]:
         pytest.skip("snapshot pinned at sf0.001")
-    df = REGISTRY[name].fn(spark, sf_dir)
-    plan = explain_str(df)
+    plan = explain_str(REGISTRY[name].fn(spark, sf_dir))
     if "InMemoryTableScan" in plan or "InMemoryRelation" in plan:
         pytest.skip(
             "shared frame already cached by an earlier test — covered by "
             "test_snapshot_hygiene_covers_all_plans via the clear-first snapshot"
         )
-    got = plan_flags(df)
+    got = plan_flags(plan)
     # plan_sha is DRIVER_STATE's operator-edit detector, not a live gate:
     # the live session's conf/caches can shift plan text harmlessly
     want = {k: v for k, v in SNAP["flags"][name].items() if k != "plan_sha"}

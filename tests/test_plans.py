@@ -4,19 +4,14 @@ whole-stage codegen fails here even though its results stay correct."""
 
 from __future__ import annotations
 
+from profitscout_engine_spark.plans import explain_str
 from profitscout_engine_spark.queries import load_registry
 
 REGISTRY = load_registry()
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        REGISTRY[name].fn(spark, sf_dir).explain("formatted")
-    return buf.getvalue()
+    return explain_str(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_filter_and_projection_pushdown(spark, sf_dir):
@@ -247,21 +242,12 @@ def test_docs_fanout_skips_repartition_on_multisplit_input(spark, sf_dir, tmp_pa
     for other in ("customer", "orders"):
         shutil.copy(f"{sf_dir}/{other}.parquet", f"{multi}/{other}.parquet")
 
-    import contextlib
-    import io as _io
-
     for name in ("chunk_split", "repetition_metrics"):
-        buf = _io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            REGISTRY[name].fn(spark, multi).explain("formatted")
-        plan = buf.getvalue()
+        plan = _plan(spark, multi, name)
         assert "Exchange" not in plan, f"{name}: forced shuffle on multi-split input\n{plan}"
 
     # The single-split fixture still fans out (the local-mode speed lever).
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        REGISTRY["chunk_split"].fn(spark, sf_dir).explain("formatted")
-    fixture_plan = buf.getvalue()
+    fixture_plan = _plan(spark, sf_dir, "chunk_split")
     assert "Exchange" in fixture_plan and "RoundRobinPartitioning" in fixture_plan
 
 
@@ -334,3 +320,31 @@ def test_plan_sha_ignores_rdd_call_site():
     )
     assert fresh == inflated
     assert other_op != fresh
+
+
+def test_explain_str_lifts_the_session_plan_cap(spark, sf_dir):
+    """The session caps every rendered plan at 4,096 chars (session.py);
+    the plan gates read explain_str, which must render the whole plan —
+    scanner_rank's runs to tens of thousands of chars — with no truncation
+    marker, and leave the cap in place afterwards."""
+    cap = "spark.sql.maxPlanStringLength"
+    assert spark.conf.get(cap) == "4096"
+    plan = _plan(spark, sf_dir, "scanner_rank")
+    assert len(plan) > 4096
+    assert "more characters" not in plan and "Truncated plan" not in plan
+    assert spark.conf.get(cap) == "4096"
+
+
+def test_cli_explain_prints_the_snapshot_plan_sha(spark, capsys):
+    """The CLI explain captures the way plans_snapshot.py does, so at
+    PLANS.json's sf_dir it prints the plan_sha PLANS.json holds."""
+    import json
+    import os
+
+    from profitscout_engine_spark.__main__ import main
+
+    snap = json.load(open(os.path.join(os.path.dirname(__file__), "..", "PLANS.json")))
+    name = "q1_pricing_summary"
+    assert main(["explain", name, "--sf-dir", snap["sf_dir"]]) == 0
+    out = capsys.readouterr().out
+    assert f"plan_sha: {snap['flags'][name]['plan_sha']}" in out

@@ -5,19 +5,14 @@ plus plan-quality gates (broadcast probing, JVM-only)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
+from profitscout_engine_spark.plans import explain_str
 from profitscout_engine_spark.queries import load_registry
 
 REGISTRY = load_registry()
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        REGISTRY[name].fn(spark, sf_dir).explain("formatted")
-    return buf.getvalue()
+    return explain_str(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_hll_relative_error_both_branches(spark, sf_dir):

@@ -4,19 +4,14 @@ plumbing determinism, and plan-quality gates for the pair generators."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
+from profitscout_engine_spark.plans import explain_str
 from profitscout_engine_spark.queries import load_registry
 
 REGISTRY = load_registry()
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        REGISTRY[name].fn(spark, sf_dir).explain("formatted")
-    return buf.getvalue()
+    return explain_str(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_minhash_catches_high_jaccard(spark, sf_dir):

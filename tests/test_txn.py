@@ -217,18 +217,32 @@ def test_delete_null_partition_value(spark, root):
     assert got == [(2, None), (3, "d2")]
 
 
-def test_merge_cross_partition_key_move_no_duplicates(spark, root):
+def _merge_txn(spark, root, base, source):
+    txn.commit_snapshot(base, root, partition_col="day")
+    txn.merge_upsert_txn(spark, root, source, keys=["k"], partition_col="day")
+    return txn.read_versioned(spark, root).collect()
+
+
+def _merge_plain(spark, root, base, source):
+    base.write.partitionBy("day").parquet(root)
+    io.merge_upsert(spark, root, source, keys=["k"], partition_col="day")
+    return spark.read.parquet(root).collect()
+
+
+@pytest.mark.parametrize(
+    "merge", [_merge_txn, _merge_plain], ids=["merge_upsert_txn", "merge_upsert"]
+)
+def test_merge_cross_partition_key_move_no_duplicates(spark, root, merge):
     """A source key that exists in the target under a DIFFERENT partition
-    value: pruning alone would link the old row through and insert the new
-    one (duplicate keys). The cross-partition probe must detect it and
-    fall back to the full merge."""
+    value: pruning alone would keep the old row and insert the new one
+    (duplicate keys). The cross-partition probe must detect it and fall
+    back to the full merge — which also drops the partition the move
+    emptied (d2)."""
     base = spark.createDataFrame(
         [(1, "d1", "a"), (3, "d2", "c")], "k int, day string, val string"
     )
-    txn.commit_snapshot(base, root, partition_col="day")
     source = spark.createDataFrame([(3, "d3", "moved")], "k int, day string, val string")
-    txn.merge_upsert_txn(spark, root, source, keys=["k"], partition_col="day")
-    rows = txn.read_versioned(spark, root).collect()
+    rows = merge(spark, root, base, source)
     assert sorted(r["k"] for r in rows) == [1, 3]
     assert {(r["k"], r["day"], r["val"]) for r in rows} == {
         (1, "d1", "a"),
