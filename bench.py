@@ -21,6 +21,27 @@ from profitscout_engine_spark.queries import load_registry
 from profitscout_engine_spark.session import get_spark
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM + parquet footers + Python worker pool once so per-query
+    numbers measure the plan, not session/daemon startup."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    spark.range(64).repartition(64).mapInPandas(
+        lambda it: (pdf for pdf in it), "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
+def noop_seconds(build) -> float:
+    """Seconds to build a frame with ``build()`` and run it into the noop
+    sink. The sink executes the COMPLETE plan (scan → shuffle → every
+    projected expression) exactly once and discards rows executor-side:
+    count() would let Catalyst prune the output projections and collect()
+    would bottleneck on the driver — both mis-measure. The build is timed
+    too: iterative and order-statistic queries run Spark jobs while
+    building (propagation loops, percentile-boundary collects)."""
+    t0 = time.time()
+    build().write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
 
 # The declared O(n²) brute-force / eval yardsticks (SURVEY §2 similarity
 # baselines). They exist to pin LSH/IVF recall, not as production paths,
@@ -43,12 +64,7 @@ def main() -> None:
     if os.environ.get("BENCH_SKIP_YARDSTICKS"):
         registry = {n: s for n, s in registry.items() if n not in _YARDSTICKS}
 
-    # Warm the JVM + parquet footers + Python worker pool once so per-query
-    # numbers measure the plan, not session/daemon startup.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(64).repartition(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -67,13 +83,7 @@ def main() -> None:
         fn = registry[name].fn
 
         def run_once() -> float:
-            t0 = time.time()
-            # noop sink: executes the COMPLETE plan (scan → shuffle → every
-            # projected expression) exactly once, discards rows executor-side.
-            # count() would let Catalyst prune the output projections;
-            # collect() would bottleneck on the driver — both mis-measure.
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.time() - t0
+            return noop_seconds(lambda: fn(spark, sf_dir))
 
         # Best-of-2 per query: shared-host noise (GC, co-tenants) randomly
         # inflates individual runs by seconds, which made round-over-round

@@ -1,5 +1,5 @@
-"""Isolate re-timer: run ONE registered query in a fresh process with the
-exact bench.py warmup + noop-sink protocol and print plan-vs-exec split.
+"""Isolate re-timer: run ONE registered query in a fresh process with
+bench.py's own warm-up and noop-sink timer and print plan-vs-exec split.
 
 Usage:  python isolate_time.py <query> [<query> ...]
         (parent mode forks one clean subprocess per query)
@@ -24,45 +24,28 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 
 def worker(name: str) -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from bench import noop_seconds, warm_up
     from profitscout_engine_spark.queries import load_registry
     from profitscout_engine_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name=f"isolate-{name}")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(64).repartition(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     fn = load_registry()[name].fn
 
-    def sink(df) -> float:
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    def full() -> float:
-        # TIME fn() TOO — bench.py does, and for iterative / order-stat
-        # queries the build step itself runs Spark jobs (propagation loops
-        # with localCheckpoints, percentile-boundary collects). The first
-        # round-9 version of this tool evaluated fn() before starting the
-        # clock and "found" a phantom 3-6x suite-vs-isolate gap that was
-        # really the untimed build work.
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    # fresh-plan: build + execute, best-of-3 (matches bench.py's protocol).
-    fresh = [full() for _ in range(3)]
+    # fresh-plan: build + execute, best-of-3, timed like bench.py (the
+    # build is inside the clock: a round-9 version that built before the
+    # clock "found" a phantom 3-6x suite-vs-isolate gap of untimed builds).
+    fresh = [noop_seconds(lambda: fn(spark, sf_dir)) for _ in range(3)]
     # exec-same-df: re-execute the LAST built frame (plan cached in Catalyst).
     df = fn(spark, sf_dir)
-    sink(df)  # pay its first-execution cost outside the timed runs
-    same = [sink(df) for _ in range(3)]
+    noop_seconds(lambda: df)  # pay its first-execution cost outside the timed runs
+    same = [noop_seconds(lambda: df) for _ in range(3)]
     print(json.dumps({
         "query": name,
         "fresh_plan_best": round(min(fresh), 3),

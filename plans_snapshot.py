@@ -40,7 +40,6 @@ CHUNK = 32
 def worker(names: list[str], out_path: str) -> None:
     from profitscout_engine_spark.plans import (
         CAPTURE_MASTER,
-        CAPTURE_SHUFFLE_PARTITIONS,
         capture_plan,
         normalized_plan_sha,
         plan_flags,
@@ -48,7 +47,7 @@ def worker(names: list[str], out_path: str) -> None:
     from profitscout_engine_spark.queries import load_registry
     from profitscout_engine_spark.session import get_spark
 
-    spark = get_spark(master=CAPTURE_MASTER, shuffle_partitions=CAPTURE_SHUFFLE_PARTITIONS)
+    spark = get_spark(master=CAPTURE_MASTER)
     reg = load_registry()
     flags: dict[str, dict] = {}
     skipped: dict[str, str] = {}

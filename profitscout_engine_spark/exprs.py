@@ -23,9 +23,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def guarded_div(num: Column, den: Column, floor: float = 1.0) -> Column:
-    """``num / max(den, floor)`` — the reference's division-by-zero guard."""
-    return num / F.greatest(den, F.lit(float(floor)))
+def guarded_div(num: Column, den: Column) -> Column:
+    """``num / max(den, 1)`` — the reference's division-by-zero guard."""
+    return num / F.greatest(den, F.lit(1.0))
 
 
 def null_div(num: Column, den: Column) -> Column:
@@ -41,15 +41,6 @@ def pct_change(new: Column, old: Column) -> Column:
 def coalesce_chain(*cols: Column) -> Column:
     """First non-null of a fallback chain (price = day.close → lastTrade → prev)."""
     return F.coalesce(*cols)
-
-
-def safe_double(col: Column) -> Column:
-    """Cast to double with NULL on failure and NULL on NaN/±inf.
-
-    Mirrors the reference's ``safe_float`` (finite-or-None) semantics.
-    """
-    d = col.cast("double")
-    return F.when(F.isnan(d) | (F.abs(d) == float("inf")), F.lit(None)).otherwise(d)
 
 
 def tier_ladder(value: Column, ladder: Sequence[tuple[float, str]], default: str) -> Column:

@@ -97,27 +97,15 @@ def asof_join(
     return u.select(*lcols, "_is_left", *filled).filter(F.col("_is_left") == 1).drop("_is_left")
 
 
-def bracket_exit(
-    trades: DataFrame,
-    bars: DataFrame,
-    key: str,
-    trade_id: str = "trade_id",
-    entry_ts: str = "entry_ts",
-    entry_price: str = "entry_price",
-    target_price: str = "target_price",
-    stop_price: str = "stop_price",
-    timeout_ts: str = "timeout_ts",
-    bar_ts: str = "ts",
-    high: str = "high",
-    low: str = "low",
-    close: str = "close",
-) -> DataFrame:
+def bracket_exit(trades: DataFrame, bars: DataFrame, key: str) -> DataFrame:
     """W13 — resolve each trade's exit against its bar path.
 
     Exit = first of {stop (low<=stop), target (high>=target)} within
     (entry_ts, timeout_ts]; same-bar tie → stop (conservative intrabar
     rule); neither → timeout at the last in-window close (entry price if
-    the bar data is exhausted).
+    the bar data is exhausted). ``trades`` carries trade_id, entry_ts,
+    entry_price, target_price, stop_price and timeout_ts; ``bars`` carries
+    ts, high, low and close; both carry ``key``.
 
     Relational form: the candidate-exit timestamps are conditional MINs over
     one trade⋈bars range join + ONE hash aggregation per trade; the winner
@@ -125,16 +113,16 @@ def bracket_exit(
     skewed entities; the bar frame is never globally sorted.
     """
     tr = trades
-    in_window = (F.col(bar_ts) > tr[entry_ts]) & (F.col(bar_ts) <= tr[timeout_ts])
+    in_window = (F.col("ts") > tr["entry_ts"]) & (F.col("ts") <= tr["timeout_ts"])
     joined = tr.join(bars, (bars[key] == tr[key]) & in_window, "left")
 
-    agg = joined.groupBy(tr[trade_id].alias("_tid")).agg(
-        F.min(F.when(bars[low] <= tr[stop_price], bars[bar_ts])).alias("stop_ts"),
-        F.min(F.when(bars[high] >= tr[target_price], bars[bar_ts])).alias("target_ts"),
-        F.max_by(bars[close], bars[bar_ts]).alias("last_close"),
-        F.count(bars[bar_ts]).alias("n_bars"),
+    agg = joined.groupBy(tr["trade_id"].alias("_tid")).agg(
+        F.min(F.when(bars["low"] <= tr["stop_price"], bars["ts"])).alias("stop_ts"),
+        F.min(F.when(bars["high"] >= tr["target_price"], bars["ts"])).alias("target_ts"),
+        F.max_by(bars["close"], bars["ts"]).alias("last_close"),
+        F.count(bars["ts"]).alias("n_bars"),
     )
-    out = tr.join(agg, tr[trade_id] == agg["_tid"], "left").drop("_tid")
+    out = tr.join(agg, tr["trade_id"] == agg["_tid"], "left").drop("_tid")
 
     stop_hit = F.col("stop_ts").isNotNull() & (
         F.col("target_ts").isNull() | (F.col("stop_ts") <= F.col("target_ts"))
@@ -148,12 +136,12 @@ def bracket_exit(
     exit_ts = (
         F.when(stop_hit, F.col("stop_ts"))
         .when(target_hit, F.col("target_ts"))
-        .otherwise(F.col(timeout_ts))
+        .otherwise(F.col("timeout_ts"))
     )
     exit_price = (
-        F.when(stop_hit, F.col(stop_price))
-        .when(target_hit, F.col(target_price))
-        .otherwise(F.coalesce(F.col("last_close"), F.col(entry_price)))
+        F.when(stop_hit, F.col("stop_price"))
+        .when(target_hit, F.col("target_price"))
+        .otherwise(F.coalesce(F.col("last_close"), F.col("entry_price")))
     )
     return (
         out.withColumn("exit_reason", exit_reason)
@@ -161,7 +149,7 @@ def bracket_exit(
         .withColumn("exit_price", exit_price)
         .withColumn(
             "realized_return_pct",
-            (F.col("exit_price") - F.col(entry_price)) / F.col(entry_price) * 100,
+            (F.col("exit_price") - F.col("entry_price")) / F.col("entry_price") * 100,
         )
     )
 
@@ -234,11 +222,13 @@ def bracket_exit_pandas(
     return u.repartition(par, key).groupBy(key).applyInPandas(walk, out_schema)
 
 
-def trading_calendar(dates: DataFrame, date_col: str = "cal_date") -> DataFrame:
-    """J9 — trading-day dimension: weekday dates indexed consecutively.
+def trading_calendar(dates: DataFrame) -> DataFrame:
+    """J9 — trading-day dimension: weekday ``cal_date`` values indexed consecutively.
     Joinable for next-trading-day / Nth-trading-day-offset arithmetic;
     tiny (≤ a few k rows for years of days) → always broadcast.
     """
-    weekdays = dates.filter(~F.dayofweek(F.col(date_col)).isin(1, 7)).select(date_col).distinct()
-    w = Window.orderBy(date_col)
+    weekdays = (
+        dates.filter(~F.dayofweek(F.col("cal_date")).isin(1, 7)).select("cal_date").distinct()
+    )
+    w = Window.orderBy("cal_date")
     return weekdays.withColumn("day_index", F.row_number().over(w))

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+EMA_SPAN = 21
+RSI_N = 14
+# Rows per block of ema_weighted_sum's rescaled closed form.
+EMA_SEGMENT = 1000
+
 
 def ewm_indicator_frame(
     bars: DataFrame,
@@ -24,10 +29,9 @@ def ewm_indicator_frame(
     ts: str = "ts",
     order_id: str = "event_id",
     close: str = "close",
-    ema_span: int = 21,
-    rsi_n: int = 14,
 ) -> DataFrame:
-    """Per-entity EWM indicator block: ema_{span}, rsi_{n}, macd, macd_signal.
+    """Per-entity EWM indicator block: ema (EMA_SPAN), rsi (RSI_N), macd,
+    macd_signal.
 
     One ``applyInPandas`` over groups of ``key``; within each group the series
     is sorted by (ts, order_id) and indicators computed with pandas EWM
@@ -43,13 +47,13 @@ def ewm_indicator_frame(
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([ts, order_id])
         c = pdf[close]
-        ema = c.ewm(span=ema_span, adjust=True).mean()
+        ema = c.ewm(span=EMA_SPAN, adjust=True).mean()
 
         delta = c.diff()
         gain = delta.clip(lower=0.0)
         loss = (-delta).clip(lower=0.0)
-        avg_gain = gain.ewm(alpha=1.0 / rsi_n, adjust=False).mean()
-        avg_loss = loss.ewm(alpha=1.0 / rsi_n, adjust=False).mean()
+        avg_gain = gain.ewm(alpha=1.0 / RSI_N, adjust=False).mean()
+        avg_loss = loss.ewm(alpha=1.0 / RSI_N, adjust=False).mean()
         rs = avg_gain / avg_loss
         rsi = 100.0 - 100.0 / (1.0 + rs)
         rsi = rsi.where(avg_loss > 0, 100.0).where(~(delta.isna()), None)
@@ -85,23 +89,22 @@ def ema_weighted_sum(
     ts: str = "ts",
     order_id: str = "event_id",
     close: str = "close",
-    span: int = 21,
-    segment: int = 1000,
 ) -> DataFrame:
-    """Segment-rescaled closed-form EMA (adjust=True) — pure window algebra,
-    numerically valid at ANY series length (no Python in the row path).
+    """Segment-rescaled closed-form EMA (adjust=True, span EMA_SPAN) — pure
+    window algebra, numerically valid at ANY series length (no Python in
+    the row path).
 
     The naive factorization ``ema_t = Σ x_i·d^(t-i) / Σ d^(t-i)`` with
     running sums of ``x_i·d^(-i)`` overflows once ``d^(-i)`` exceeds double
     range (~10k rows at span 21). Rescaled form: rows are cut into
-    ``segment``-row blocks per entity, so within-block exponents stay
-    ≤ ``segment`` (bounded); each block's tail influence is folded across
+    EMA_SEGMENT-row blocks per entity, so within-block exponents stay
+    ≤ EMA_SEGMENT (bounded); each block's tail influence is folded across
     blocks SEQUENTIALLY with the recurrence ``N_s = d^len_s·(T_s + N_{s-1})``
     over the per-entity block array — an ``aggregate()`` lambda on ~n/1000
     rows of state, no overflow at any depth, still zero Python. The
     denominator collapses to the exact closed form ``(1-d^t)/(1-d)``.
 
-    Attenuation floor: a term ``segment`` rows back is weighted d^1000
+    Attenuation floor: a term EMA_SEGMENT rows back is weighted d^1000
     (~1e-41 at span 21) — far below double epsilon relative to recent
     terms, so the rescaled sum agrees with pandas ``ewm(span, adjust=True)``
     to ~1e-12 relative at any length (property-tested at 50k rows).
@@ -109,13 +112,13 @@ def ema_weighted_sum(
     """
     from pyspark.sql.window import Window
 
-    alpha = 2.0 / (span + 1.0)
+    alpha = 2.0 / (EMA_SPAN + 1.0)
     d = 1.0 - alpha
     w_order = Window.partitionBy(key).orderBy(ts, order_id)
     rows = (
         bars.withColumn("_rn", F.row_number().over(w_order))
-        .withColumn("_seg", ((F.col("_rn") - 1) / segment).cast("int"))
-        .withColumn("_m", F.col("_rn") - F.col("_seg") * segment)  # 1..segment
+        .withColumn("_seg", ((F.col("_rn") - 1) / EMA_SEGMENT).cast("int"))
+        .withColumn("_m", F.col("_rn") - F.col("_seg") * EMA_SEGMENT)  # 1..EMA_SEGMENT
         .withColumn("_term", F.col(close) * F.pow(F.lit(d), -F.col("_m")))
     )
     # Within-block running numerator: d^m · Σ_{i≤m} x_i·d^(-i)
@@ -128,7 +131,7 @@ def ema_weighted_sum(
         "_local_num", F.pow(F.lit(d), F.col("_m")) * F.sum("_term").over(w_seg)
     )
     # Cross-block carry: N_{s-1} = fold over blocks 0..s-1 of
-    # N = d^len · (T + N_prev); per-entity block array is tiny (n/segment).
+    # N = d^len · (T + N_prev); per-entity block array is tiny (n/EMA_SEGMENT).
     segs = rows.groupBy(key, "_seg").agg(
         F.sum("_term").alias("_t"), F.count("*").alias("_len")
     )

@@ -22,6 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+CAPITAL0 = 10_000.0
+BET_FRACTION = 0.075
+# Capital below CAPITAL0 * RUIN_LEVEL marks a sim as ruined.
+RUIN_LEVEL = 0.5
+# Tiered sizing: (capital floor, bet), highest floor first.
+BET_TIERS = ((20_000.0, 1000.0), (10_000.0, 750.0), (0.0, 500.0))
+
 
 def hash_uniform(*cols, seed: int = 42):
     """Deterministic U[0,1) from column values — partition-independent,
@@ -51,9 +58,6 @@ def simulate_paths(
     returns_pool: list[float],
     n_sims: int,
     trades_per_sim: int,
-    capital0: float = 10_000.0,
-    bet_fraction: float = 0.075,
-    ruin_level: float = 0.5,
     seed: int = 42,
 ) -> DataFrame:
     """Fixed-fraction Monte Carlo: per-sim final capital, max drawdown, ruin.
@@ -80,17 +84,17 @@ def simulate_paths(
     ret = F.element_at(pool, draw + 1) / 100.0  # pool is in pct
 
     w = Window.partitionBy("sim_id").orderBy("seq").rowsBetween(Window.unboundedPreceding, 0)
-    log_growth = F.log1p(F.lit(bet_fraction) * ret)
+    log_growth = F.log1p(F.lit(BET_FRACTION) * ret)
     path = (
-        grid.withColumn("capital", F.lit(capital0) * F.exp(F.sum(log_growth).over(w)))
-        .withColumn("peak", F.greatest(F.max("capital").over(w), F.lit(capital0)))
+        grid.withColumn("capital", F.lit(CAPITAL0) * F.exp(F.sum(log_growth).over(w)))
+        .withColumn("peak", F.greatest(F.max("capital").over(w), F.lit(CAPITAL0)))
         .withColumn("drawdown", (F.col("peak") - F.col("capital")) / F.col("peak"))
     )
     return path.groupBy("sim_id").agg(
         F.max_by("capital", "seq").alias("final_capital"),
         F.max("drawdown").alias("max_drawdown"),
         F.min("capital").alias("min_capital"),
-        (F.min("capital") < capital0 * ruin_level).alias("ruined"),
+        (F.min("capital") < CAPITAL0 * RUIN_LEVEL).alias("ruined"),
     )
 
 
@@ -99,9 +103,6 @@ def simulate_paths_tiered(
     returns_pool: list[float],
     n_sims: int,
     trades_per_sim: int,
-    capital0: float = 10_000.0,
-    tiers: tuple[tuple[float, float], ...] = ((20_000.0, 1000.0), (10_000.0, 750.0), (0.0, 500.0)),
-    ruin_level: float = 0.5,
     seed: int = 42,
 ) -> DataFrame:
     """Tiered-bet Monte Carlo (reference's sniper sizing): bet size depends on
@@ -125,16 +126,12 @@ def simulate_paths_tiered(
     pool = F.array(*[F.lit(float(r)) for r in returns_pool])
     drawn = grid.withColumn("ret_pct", F.element_at(pool, draw + 1))
 
-    tier_arr = sorted(tiers, key=lambda kv: -kv[0])
-
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("seq")
-        capital = capital0
-        peak = capital0
+        capital = peak = min_cap = CAPITAL0
         max_dd = 0.0
-        min_cap = capital0
         for r in pdf["ret_pct"].to_numpy():
-            bet = next(b for floor_cap, b in tier_arr if capital >= floor_cap)
+            bet = next(b for floor_cap, b in BET_TIERS if capital >= floor_cap)
             bet = min(bet, capital)
             capital += bet * (r / 100.0)
             peak = max(peak, capital)
@@ -146,7 +143,7 @@ def simulate_paths_tiered(
                 "final_capital": [float(capital)],
                 "max_drawdown": [float(max_dd)],
                 "min_capital": [float(min_cap)],
-                "ruined": [bool(min_cap < capital0 * ruin_level)],
+                "ruined": [bool(min_cap < CAPITAL0 * RUIN_LEVEL)],
             }
         )
 
@@ -167,9 +164,6 @@ def simulate_paths_pooled(
     order_col: str,
     n_sims: int,
     trades_per_sim: int,
-    capital0: float = 10_000.0,
-    bet_fraction: float = 0.075,
-    ruin_level: float = 0.5,
     seed: int = 42,
 ) -> DataFrame:
     """Fixed-fraction Monte Carlo bootstrapping from a DISTRIBUTED pool.
@@ -209,15 +203,15 @@ def simulate_paths_pooled(
     drawn = grid.withColumn("_idx", draw).join(F.broadcast(pool), "_idx")
 
     w = Window.partitionBy("sim_id").orderBy("seq").rowsBetween(Window.unboundedPreceding, 0)
-    log_growth = F.log(F.lit(1.0) + F.lit(bet_fraction) * F.col("_ret"))
+    log_growth = F.log(F.lit(1.0) + F.lit(BET_FRACTION) * F.col("_ret"))
     path = (
-        drawn.withColumn("capital", F.lit(capital0) * F.exp(F.sum(log_growth).over(w)))
-        .withColumn("peak", F.greatest(F.max("capital").over(w), F.lit(capital0)))
+        drawn.withColumn("capital", F.lit(CAPITAL0) * F.exp(F.sum(log_growth).over(w)))
+        .withColumn("peak", F.greatest(F.max("capital").over(w), F.lit(CAPITAL0)))
         .withColumn("drawdown", (F.col("peak") - F.col("capital")) / F.col("peak"))
     )
     return path.groupBy("sim_id").agg(
         F.max_by("capital", "seq").alias("final_capital"),
         F.max("drawdown").alias("max_drawdown"),
         F.min("capital").alias("min_capital"),
-        (F.min("capital") < capital0 * ruin_level).alias("ruined"),
+        (F.min("capital") < CAPITAL0 * RUIN_LEVEL).alias("ruined"),
     )

@@ -11,8 +11,8 @@ buffer inside the Arrow batch loop — geometry (width/height) comes from
 the decoded header, never from the metadata struct, and the per-row
 pixel features depend on the reshape being right. Heavy codecs
 (JPEG/PNG/audio) aren't in this container; swapping one in changes only
-the body of ``decode_batch`` — schema, batching, and partitioning are
-already exactly what a real codec needs.
+the body of the shared decoder ``_ppm_decoder`` — schema, batching, and
+partitioning are already exactly what a real codec needs.
 """
 
 from __future__ import annotations
@@ -76,6 +76,35 @@ def with_payload(docs: DataFrame) -> DataFrame:
     )
 
 
+def _ppm_decoder():
+    """The P6 parse-and-validate step of every image kernel:
+    ``decode(doc_id, payload) -> (buf, img)`` with ``img`` the
+    (height, width, 3) uint8 pixel array. A payload that is not P6, has a
+    maxval other than 255, or whose pixel plane disagrees with its header
+    raises. Built per call, so the returned function is nested and
+    cloudpickle ships it by value with the batch closure that uses it."""
+
+    def decode(doc_id, payload):
+        import numpy as np
+
+        buf = bytes(payload)
+        if buf[:3] != b"P6\n":
+            raise ValueError(f"doc {doc_id}: not a P6 PPM payload")
+        nl_dims = buf.index(b"\n", 3)
+        w_s, h_s = buf[3:nl_dims].split()
+        w, h = int(w_s), int(h_s)
+        nl_max = buf.index(b"\n", nl_dims + 1)
+        maxval = int(buf[nl_dims + 1 : nl_max])
+        if maxval != 255:
+            raise ValueError(f"doc {doc_id}: unsupported maxval {maxval}")
+        pix = np.frombuffer(buf, dtype=np.uint8, offset=nl_max + 1)
+        if pix.size != w * h * 3:
+            raise ValueError(f"doc {doc_id}: pixel plane {pix.size} != {w}x{h}x3")
+        return buf, pix.reshape(h, w, 3)
+
+    return decode
+
+
 def decode_features(payloads: DataFrame) -> DataFrame:
     """Arrow-batched PPM decode over (doc_id, payload, meta).
 
@@ -93,6 +122,7 @@ def decode_features(payloads: DataFrame) -> DataFrame:
     """
     frame_bytes = FRAME_BYTES
     columns = [f.name for f in FEATURE_SCHEMA.fields]
+    decode = _ppm_decoder()
 
     def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -100,22 +130,8 @@ def decode_features(payloads: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:3] != b"P6\n":
-                    raise ValueError(f"doc {doc_id}: not a P6 PPM payload")
-                nl_dims = buf.index(b"\n", 3)
-                w_s, h_s = buf[3:nl_dims].split()
-                w, h = int(w_s), int(h_s)
-                nl_max = buf.index(b"\n", nl_dims + 1)
-                maxval = int(buf[nl_dims + 1 : nl_max])
-                if maxval != 255:
-                    raise ValueError(f"doc {doc_id}: unsupported maxval {maxval}")
-                pix = np.frombuffer(buf, dtype=np.uint8, offset=nl_max + 1)
-                if pix.size != w * h * 3:
-                    raise ValueError(
-                        f"doc {doc_id}: pixel plane {pix.size} != {w}x{h}x3"
-                    )
-                img = pix.reshape(h, w, 3)
+                buf, img = decode(doc_id, payload)
+                h, w, _ = img.shape
                 rows.append(
                     (
                         doc_id,
@@ -153,15 +169,16 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def sample_frames(payloads: DataFrame, k: int = FRAME_SAMPLE_K) -> DataFrame:
+def sample_frames(payloads: DataFrame) -> DataFrame:
     """Frame sampling over an opaque binary column: the payload is read as
     consecutive FRAME_BYTES-byte frames (the video-bitstream model: fixed
-    stride, header included) and every k-th frame is emitted as its own
-    row with per-frame statistics. One Arrow batch pass, output rows
-    ≈ input_bytes/(FRAME_BYTES·k) — the decimation step a video pipeline
-    runs before expensive per-frame inference. Means are exact int64
-    sums over 64 bytes divided once, so the oracle replays them."""
-    frame_bytes, step = FRAME_BYTES, k
+    stride, header included) and every FRAME_SAMPLE_K-th frame is emitted
+    as its own row with per-frame statistics. One Arrow batch pass, output
+    rows ≈ input_bytes/(FRAME_BYTES·FRAME_SAMPLE_K) — the decimation step
+    a video pipeline runs before expensive per-frame inference. Means are
+    exact int64 sums over 64 bytes divided once, so the oracle replays
+    them."""
+    frame_bytes, step = FRAME_BYTES, FRAME_SAMPLE_K
 
     def sample_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -195,6 +212,7 @@ def resize_nearest(payloads: DataFrame) -> DataFrame:
     so the oracle can replay it from the source bytes. The shape an
     image-preprocessing stage (thumbnailing before feature extraction)
     takes over binary columns."""
+    decode = _ppm_decoder()
 
     def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -202,16 +220,7 @@ def resize_nearest(payloads: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:3] != b"P6\n":
-                    raise ValueError(f"doc {doc_id}: not a P6 PPM payload")
-                nl_dims = buf.index(b"\n", 3)
-                w_s, h_s = buf[3:nl_dims].split()
-                w, h = int(w_s), int(h_s)
-                nl_max = buf.index(b"\n", nl_dims + 1)
-                img = np.frombuffer(buf, dtype=np.uint8, offset=nl_max + 1).reshape(
-                    h, w, 3
-                )
+                _, img = decode(doc_id, payload)
                 small = img[::2, ::2]  # strided nearest-neighbor view
                 rows.append(
                     (
@@ -297,6 +306,7 @@ def dhash_bands(payloads: DataFrame) -> DataFrame:
     """
     columns = [f.name for f in DHASH_SCHEMA.fields]
     gw, gh = DHASH_GRID_W, DHASH_GRID_H
+    decode = _ppm_decoder()
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -304,16 +314,8 @@ def dhash_bands(payloads: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:3] != b"P6\n":
-                    raise ValueError(f"doc {doc_id}: not a P6 PPM payload")
-                nl_dims = buf.index(b"\n", 3)
-                w_s, h_s = buf[3:nl_dims].split()
-                w, h = int(w_s), int(h_s)
-                nl_max = buf.index(b"\n", nl_dims + 1)
-                img = np.frombuffer(buf, dtype=np.uint8, offset=nl_max + 1).reshape(
-                    h, w, 3
-                )
+                _, img = decode(doc_id, payload)
+                h, w, _ = img.shape
                 gray = img.astype(np.int64).sum(axis=2)  # exact r+g+b
                 ys = np.arange(gh) * h // gh
                 xs = np.arange(gw) * w // gw

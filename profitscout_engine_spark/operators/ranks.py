@@ -13,9 +13,9 @@ the classic range-bucketed decomposition:
    (shuffle-read order is nondeterministic), silently mis-aligning the
    two — observed at sf0.1. A value-deterministic bucket id cannot drift,
    and ties land in one bucket by construction.
-2. Per-bucket row counts or sums (<= num_buckets rows) -> running prefix
+2. Per-bucket row counts or sums (<= NUM_BUCKETS rows) -> running prefix
    offsets via a window over the *bucket frame only* (bounded:
-   num_buckets rows) -> broadcast back.
+   NUM_BUCKETS rows) -> broadcast back.
 3. Within-bucket running count or sum — distributed, one sort per range
    slice.
 4. global rank or prefix sum = prefix offset + within-bucket value; tie
@@ -48,6 +48,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _BKT = "_rank_bkt"
+
+# Range buckets of every decomposition: load balance only, never results.
+NUM_BUCKETS = 32
 
 # Stats-gated strategy switch: below this optimizer-estimated input size the
 # single-buffer exact percentile()/median() aggregate is both safe and much
@@ -99,18 +102,18 @@ def _as_double(df: DataFrame, key: Column) -> Column:
     return key.cast("double")
 
 
-def _approx_bounds(dkey: Column, num_buckets: int) -> Column:
-    """Aggregate expression: the num_buckets-1 approximate quantiles of
+def _approx_bounds(dkey: Column) -> Column:
+    """Aggregate expression: the NUM_BUCKETS-1 approximate quantiles of
     ``dkey`` that serve as range-bucket boundaries."""
     return F.percentile_approx(
-        dkey, F.array(*[F.lit(i / num_buckets) for i in range(1, num_buckets)])
+        dkey, F.array(*[F.lit(i / NUM_BUCKETS) for i in range(1, NUM_BUCKETS)])
     )
 
 
-def _global_boundaries(df: DataFrame, dkey: Column, num_buckets: int) -> list[float]:
+def _global_boundaries(df: DataFrame, dkey: Column) -> list[float]:
     """One tiny driver round-trip: the 1-row boundary literals shared by
     every branch of a global (ungrouped) decomposition."""
-    [row] = df.select(_approx_bounds(dkey, num_buckets).alias("b")).collect()
+    [row] = df.select(_approx_bounds(dkey).alias("b")).collect()
     return sorted(set(row["b"] or []))
 
 
@@ -141,7 +144,6 @@ def _grouped_order_statistics(
     group_cols: list[str],
     col: str,
     positions_for: Callable[[int], Iterable[int]],
-    num_buckets: int,
 ) -> tuple[dict[tuple, dict[int, float]], dict[tuple, int]]:
     """The selection kernel: exact values at 1-indexed positions of
     ``col``'s sorted order (nulls excluded) within each group, where
@@ -181,7 +183,7 @@ def _grouped_order_statistics(
         brows = (
             vals.groupBy("_g")
             .agg(
-                _approx_bounds(F.col("_vd"), num_buckets).alias("b"),
+                _approx_bounds(F.col("_vd")).alias("b"),
                 F.count(F.lit(1)).alias("n"),
                 *[F.first(f"_g{i}").alias(f"_g{i}") for i in range(len(group_cols))],
             )
@@ -269,7 +271,7 @@ def _interpolate(
 
 
 def _distributed_percentiles(
-    df: DataFrame, group_cols: list[str], col: str, probs: list[float], num_buckets: int
+    df: DataFrame, group_cols: list[str], col: str, probs: list[float]
 ) -> dict[tuple, list[float]]:
     """Per-group interpolated percentiles from the selection kernel."""
     stats, n_by_group = _grouped_order_statistics(
@@ -277,7 +279,6 @@ def _distributed_percentiles(
         group_cols,
         col,
         lambda n: [x for lo, hi, _, _ in _interp_plan(n, probs) for x in (lo, hi)],
-        num_buckets,
     )
     return {
         g: _interpolate(_interp_plan(n, probs), stats[g].__getitem__)
@@ -285,23 +286,19 @@ def _distributed_percentiles(
     }
 
 
-def order_statistics(
-    df: DataFrame, col: str, positions: list[int], num_buckets: int = 32
-) -> dict[int, float]:
+def order_statistics(df: DataFrame, col: str, positions: list[int]) -> dict[int, float]:
     """Exact values (cast to double) at the given 1-indexed positions of
     ``col``'s sorted order (nulls excluded) — the no-group case of the
     selection kernel :func:`_grouped_order_statistics`. Positions past
     the row count are absent; empty or all-NULL input returns ``{}``."""
     stats, _ = _grouped_order_statistics(
         df.select(F.col(col).cast("double").alias("v")), [], "v",
-        lambda n: positions, num_buckets,
+        lambda n: positions,
     )
     return stats.get((), {})
 
 
-def exact_percentiles(
-    df: DataFrame, col: str, probs: list[float], num_buckets: int = 32
-) -> list[float]:
+def exact_percentiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
     """Exact linear-interpolated percentiles (the ``percentile`` /
     ``quantile_cont`` contract, :func:`_interp_plan`) of ``col`` cast to
     double, nulls excluded; NaN per prob for empty or all-NULL input.
@@ -317,7 +314,7 @@ def exact_percentiles(
             float("nan") for _ in probs
         ]
     res = _distributed_percentiles(
-        df.select(F.col(col).cast("double").alias("v")), [], "v", probs, num_buckets
+        df.select(F.col(col).cast("double").alias("v")), [], "v", probs
     )
     return res.get((), [float("nan") for _ in probs])
 
@@ -438,11 +435,7 @@ def percentile_literal_map(
 
 
 def grouped_exact_percentiles(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    probs: list[float],
-    num_buckets: int = 32,
+    df: DataFrame, group_cols: list[str], col: str, probs: list[float]
 ) -> dict[tuple, list[float]]:
     """Exact per-GROUP interpolated percentiles for the bounded-group /
     huge-rows shape (returnflag, language, priority, scenario, …) —
@@ -466,18 +459,16 @@ def grouped_exact_percentiles(
         return {
             tuple(r[g] for g in group_cols): list(r["qs"]) for r in rows
         }
-    return _distributed_percentiles(df, group_cols, col, probs, num_buckets)
+    return _distributed_percentiles(df, group_cols, col, probs)
 
 
-def _prefix_sum(
-    df: DataFrame, key: Column, value: Column, out: str, num_buckets: int
-) -> DataFrame:
+def _prefix_sum(df: DataFrame, key: Column, value: Column, out: str) -> DataFrame:
     """:func:`with_prefix_sum` that keeps the bucket column ``_BKT`` (as
     the first column), so a caller can add windows partitioned by it with
     no further exchange."""
     dkey = _as_double(df, key)
-    part = df.withColumn(_BKT, _bucket_expr(dkey, _global_boundaries(df, dkey, num_buckets)))
-    # Bounded frame: at most num_buckets + 1 rows — the one permissible
+    part = df.withColumn(_BKT, _bucket_expr(dkey, _global_boundaries(df, dkey)))
+    # Bounded frame: at most NUM_BUCKETS + 1 rows — the one permissible
     # unpartitioned window in this pattern.
     offsets = (
         part.groupBy(_BKT)
@@ -501,11 +492,7 @@ def _prefix_sum(
 
 
 def with_prefix_sum(
-    df: DataFrame,
-    key: str | Column,
-    value: str | Column,
-    out: str,
-    num_buckets: int = 32,
+    df: DataFrame, key: str | Column, value: str | Column, out: str
 ) -> DataFrame:
     """Append column ``out`` holding the inclusive running total of
     ``value`` in ascending ``key`` order — ``SUM(v) OVER (ORDER BY key)``
@@ -521,12 +508,10 @@ def with_prefix_sum(
     """
     k = F.col(key) if isinstance(key, str) else key
     v = F.col(value) if isinstance(value, str) else value
-    return _prefix_sum(df, k, v, out, num_buckets).drop(_BKT)
+    return _prefix_sum(df, k, v, out).drop(_BKT)
 
 
-def with_avg_rank(
-    df: DataFrame, col: str | Column, out: str, num_buckets: int = 32
-) -> DataFrame:
+def with_avg_rank(df: DataFrame, col: str | Column, out: str) -> DataFrame:
     """Append column ``out`` holding the exact AVERAGE (fractional) rank of
     ``col`` — ``RANK() + (tie_count - 1)/2``, the standard Spearman tie
     treatment — without a single-task global window. Null keys rank first
@@ -539,7 +524,7 @@ def with_avg_rank(
     partitioning by the key alone would add an exchange per call."""
     key = F.col(col) if isinstance(col, str) else col
     return (
-        _prefix_sum(df, key, F.lit(1), "_ps", num_buckets)
+        _prefix_sum(df, key, F.lit(1), "_ps")
         .withColumn("_tc", F.count(F.lit(1)).over(Window.partitionBy(_BKT, key)))
         .withColumn(out, F.col("_ps") - (F.col("_tc") - F.lit(1)) / F.lit(2.0))
         .drop(_BKT, "_ps", "_tc")
@@ -559,7 +544,6 @@ def grouped_weighted_median_df(
     col: str,
     weight: str,
     out: str = "wmedian",
-    num_buckets: int = 32,
 ) -> DataFrame:
     """Exact LOWER weighted median per group — the smallest value v with
     2 * cumulative_weight(<= v) >= total_weight — as a DataFrame of
@@ -576,7 +560,7 @@ def grouped_weighted_median_df(
     - above it: the range-bucketed decomposition (ranks.py header), all
       join-back, no literal maps: (1) global approx value boundaries
       (load balance only — the single 1-row collect); (2) per-(group,
-      bucket) weight sums + a window over the bounded ≤num_buckets
+      bucket) weight sums + a window over the bounded ≤NUM_BUCKETS
       bucket frame per group locate each group's crossing bucket;
       (3) an equi-join narrows the final RANGE-framed running weight to
       ONLY the crossing slices — ties on the value share the
@@ -617,10 +601,10 @@ def grouped_weighted_median_df(
     # one bounded collect: the 1-row boundary literals (load balance only —
     # a returned-DataFrame operator must not own persist/unpersist lifetime,
     # so the plan below re-derives vals; AQE reuses the shuffle where it can)
-    boundaries = _global_boundaries(vals, F.col("_vd"), num_buckets)
+    boundaries = _global_boundaries(vals, F.col("_vd"))
     part = vals.withColumn(_BKT, _bucket_expr(F.col("_vd"), boundaries))
     bw = part.groupBy(*gcols, _BKT).agg(F.sum("_w").cast("long").alias("_bw"))
-    # crossing-bucket location: windows over the bounded <= num_buckets
+    # crossing-bucket location: windows over the bounded <= NUM_BUCKETS
     # bucket frame per group — never a data-sized frame
     w_bkt = Window.partitionBy(*gcols).orderBy(_BKT)
     w_all = Window.partitionBy(*gcols)
@@ -650,11 +634,7 @@ def grouped_weighted_median_df(
 
 
 def grouped_weighted_median(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    weight: str,
-    num_buckets: int = 32,
+    df: DataFrame, group_cols: list[str], col: str, weight: str
 ) -> dict[tuple, int | float]:
     """Collected-dict convenience form of :func:`grouped_weighted_median_df`
     for BOUNDED group cardinality (return flags, languages, priorities):
@@ -664,9 +644,7 @@ def grouped_weighted_median(
     use the ``_df`` variant and keep the medians distributed.
     """
     cap = WEIGHTED_MEDIAN_COLLECT_MAX_GROUPS
-    res = grouped_weighted_median_df(
-        df, group_cols, col, weight, out="_m", num_buckets=num_buckets
-    )
+    res = grouped_weighted_median_df(df, group_cols, col, weight, out="_m")
     rows = res.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(

@@ -22,6 +22,8 @@ from ..exprs import clamp, step_ladder
 # 5-7 → +2, 4 → +1 (overnight_scanner.py:279-287), score clamped to 10.
 CLUSTER_BOOST_STEPS = ((8.0, 3), (5.0, 2), (4.0, 1))
 SCORE_CAP = 10.0
+# Rows scoring at least this qualify for, and count towards, a cluster boost.
+CLUSTER_MIN_SCORE = 3
 
 
 def flow_score(
@@ -72,7 +74,6 @@ def apply_cluster_boost(
     scored: DataFrame,
     cluster_keys: list[str],
     score_col: str = "score",
-    min_score: int = 3,
 ) -> DataFrame:
     """J2 — count qualifying rows per cluster, join counts back, boost.
 
@@ -81,7 +82,7 @@ def apply_cluster_boost(
     it; the fact side never shuffles.
     """
     counts = (
-        scored.filter(F.col(score_col) >= min_score)
+        scored.filter(F.col(score_col) >= CLUSTER_MIN_SCORE)
         .groupBy(*cluster_keys)
         .agg(F.count("*").alias("cluster_size"))
     )
@@ -89,7 +90,7 @@ def apply_cluster_boost(
         "cluster_size", F.coalesce(F.col("cluster_size"), F.lit(0))
     )
     boost = F.when(
-        F.col(score_col) >= min_score,
+        F.col(score_col) >= CLUSTER_MIN_SCORE,
         step_ladder(F.col("cluster_size").cast("double"), CLUSTER_BOOST_STEPS),
     ).otherwise(F.lit(0))
     return (

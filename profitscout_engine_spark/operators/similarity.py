@@ -35,32 +35,6 @@ def as_double(vec: str | Column) -> Column:
     return c.cast("array<double>")
 
 
-def dot(a: str, b: str, dim: int = DIM) -> Column:
-    """Dot product of two array<double> columns, unrolled to explicit
-    left-associated arithmetic (bit-identical to a sequential fold:
-    IEEE ``0+x == x``), matching DuckDB's list kernels exactly."""
-    terms = " + ".join(f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1))
-    return F.expr(terms)
-
-
-def norm(a: str, dim: int = DIM) -> Column:
-    terms = " + ".join(f"element_at({a}, {i}) * element_at({a}, {i})" for i in range(1, dim + 1))
-    return F.sqrt(F.expr(terms))
-
-
-def cosine(a: str, b: str, dim: int = DIM) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def l2_distance(a: str, b: str, dim: int = DIM) -> Column:
-    terms = " + ".join(
-        f"(element_at({a}, {i}) - element_at({b}, {i}))"
-        f" * (element_at({a}, {i}) - element_at({b}, {i}))"
-        for i in range(1, dim + 1)
-    )
-    return F.sqrt(F.expr(terms))
-
-
 # --- scalar-column kernels — the hot-pair-scan fast path ----------------------
 # Per-element array access (element_at / higher-order lambdas) runs outside
 # efficient codegen on the O(n²)/candidate pair scan. The fast path unpacks
@@ -70,20 +44,20 @@ def l2_distance(a: str, b: str, dim: int = DIM) -> Column:
 # to the DuckDB oracle.
 
 
-def unpack(df: DataFrame, vec_col: str, prefix: str, keep: list[str], dim: int = DIM) -> DataFrame:
-    """Explode an array<double> column into scalar columns {prefix}0..{dim-1}."""
+def unpack(df: DataFrame, vec_col: str, prefix: str, keep: list[str]) -> DataFrame:
+    """Explode an array<double> column into scalar columns {prefix}0..{DIM-1}."""
     return df.select(
         *keep,
-        *[F.element_at(F.col(vec_col), i + 1).alias(f"{prefix}{i}") for i in range(dim)],
+        *[F.element_at(F.col(vec_col), i + 1).alias(f"{prefix}{i}") for i in range(DIM)],
     )
 
 
-def scalar_dot(pa: str, pb: str, dim: int = DIM) -> Column:
-    return F.expr(" + ".join(f"{pa}{i} * {pb}{i}" for i in range(dim)))
+def scalar_dot(pa: str, pb: str) -> Column:
+    return F.expr(" + ".join(f"{pa}{i} * {pb}{i}" for i in range(DIM)))
 
 
-def scalar_norm(p: str, dim: int = DIM) -> Column:
-    return F.sqrt(F.expr(" + ".join(f"{p}{i} * {p}{i}" for i in range(dim))))
+def scalar_norm(p: str) -> Column:
+    return F.sqrt(F.expr(" + ".join(f"{p}{i} * {p}{i}" for i in range(DIM))))
 
 
 def fold_dot(a: str, b: str) -> Column:
@@ -139,15 +113,16 @@ def hyperplane_sign(table: int, plane: int, dim: int) -> int:
     return 1 if int(h[:2], 16) % 2 else -1
 
 
-def lsh_buckets(vecs: DataFrame, vec_col: str = "v", dim: int = DIM) -> DataFrame:
+def lsh_buckets(vecs: DataFrame) -> DataFrame:
     """(vec_id, table_id, bucket) — one row per hash table per vector.
 
-    Relational formulation: posexplode the vectors, broadcast-join the
-    ±1 hyperplane matrix, hash-aggregate the per-plane dots, then pack
-    the P sign bits into a bucket id. Everything is codegen'd hash
-    aggregation — no giant unrolled expressions (which blow up Catalyst
-    canonicalization), and it scales to any corpus size: the matrix is
-    L×P×dim rows broadcast, the corpus shuffles once on vec_id.
+    ``vecs`` carries (vec_id, v). Relational formulation: posexplode the
+    vectors, broadcast-join the ±1 hyperplane matrix, hash-aggregate the
+    per-plane dots, then pack the P sign bits into a bucket id. Everything
+    is codegen'd hash aggregation — no giant unrolled expressions (which
+    blow up Catalyst canonicalization), and it scales to any corpus size:
+    the matrix is L×P×DIM rows broadcast, the corpus shuffles once on
+    vec_id.
 
     Hash-agg summation order is partition-dependent, but only the SIGN
     of each dot reaches the bucket id; a sign flip needs |dot| below
@@ -161,19 +136,19 @@ def lsh_buckets(vecs: DataFrame, vec_col: str = "v", dim: int = DIM) -> DataFram
     # local rows costs a driver→JVM round trip and extra local-relation
     # jobs per query call, and wouldn't scale past toy matrix sizes.
     tp = F.col("id")
-    table_id = (tp / (LSH_PLANES * dim)).cast("int")
-    plane = ((tp / dim).cast("long") % LSH_PLANES).cast("int")
-    pos = (tp % dim).cast("int")
+    table_id = (tp / (LSH_PLANES * DIM)).cast("int")
+    plane = ((tp / DIM).cast("long") % LSH_PLANES).cast("int")
+    pos = (tp % DIM).cast("int")
     hexpair = F.substring(
         F.md5(F.concat_ws(",", table_id.cast("string"), plane.cast("string"), pos.cast("string"))),
         1,
         2,
     )
     sign = F.when(F.conv(hexpair, 16, 10).cast("int") % 2 == 1, 1.0).otherwise(-1.0)
-    matrix = spark.range(LSH_TABLES * LSH_PLANES * dim).select(
+    matrix = spark.range(LSH_TABLES * LSH_PLANES * DIM).select(
         table_id.alias("table_id"), plane.alias("plane"), pos.alias("pos"), sign.alias("sign")
     )
-    flat = vecs.select("vec_id", F.posexplode(F.col(vec_col)).alias("pos", "x"))
+    flat = vecs.select("vec_id", F.posexplode(F.col("v")).alias("pos", "x"))
     dots = (
         flat.join(F.broadcast(matrix), "pos")
         .groupBy("vec_id", "table_id", "plane")
@@ -189,7 +164,7 @@ def lsh_buckets(vecs: DataFrame, vec_col: str = "v", dim: int = DIM) -> DataFram
     )
 
 
-def label_centroids(embeddings: DataFrame, dim: int = DIM) -> DataFrame:
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """(label, centroid array<double>) — mean vector per label.
 
     posexplode → groupBy(label, pos) avg → re-assemble ordered by pos.

@@ -49,8 +49,8 @@ def word_shingles(n: int = 3) -> Column:
     )
 
 
-def shingle_frame(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) — exploded word n-grams, optionally set-semantics.
+def shingle_frame(docs: DataFrame, distinct: bool = True) -> DataFrame:
+    """(doc_id, shingle) — exploded word 3-grams, optionally set-semantics.
 
     Repartitions the input first: the fixture parquet is a single split,
     and tokenize+explode+md5 is the CPU-heavy map side of every dedup
@@ -59,7 +59,7 @@ def shingle_frame(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFra
     """
     par = docs.sparkSession.sparkContext.defaultParallelism
     tk = docs.repartition(par).select("doc_id", tokens(F.col("text")).alias("tk"))
-    sh = tk.select("doc_id", F.explode(word_shingles(n)).alias("shingle"))
+    sh = tk.select("doc_id", F.explode(word_shingles()).alias("shingle"))
     return sh.dropDuplicates(["doc_id", "shingle"]) if distinct else sh
 
 

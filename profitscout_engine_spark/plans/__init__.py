@@ -55,8 +55,8 @@ def _pinned_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, old)
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
-    """Capture ``df.explain(mode)`` as a string.
+def explain_str(df: DataFrame) -> str:
+    """Capture ``df.explain("formatted")`` as a string.
 
     Lifts ``spark.sql.maxPlanStringLength`` for the duration of the call:
     the session caps it (see session.py — per-action plan rendering for the
@@ -69,7 +69,7 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     ):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            df.explain(mode)
+            df.explain("formatted")
         return buf.getvalue()
 
 
@@ -249,7 +249,7 @@ def _canon_bracket_groups(line: str) -> str:
 def count_unpartitioned_windows(plan: str) -> int:
     """Window nodes whose spec has NO partition columns — every row of the
     input funnels through one task. Legitimate ONLY over provably bounded
-    frames (a calendar day spine, a ≤num_buckets bucket table, a literal
+    frames (a calendar day spine, a ≤NUM_BUCKETS bucket table, a literal
     lag spine); on a data-sized frame it is the single-task sort this
     engine's ranks/scan operators exist to kill. Detection: in the
     formatted node details, a Window's Arguments render as

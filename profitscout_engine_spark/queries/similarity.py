@@ -267,7 +267,7 @@ def _packed_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 
 
 def _score_candidates(
-    cand: DataFrame, a: DataFrame, b: DataFrame, rounder, topk: int, repartition: bool = True
+    cand: DataFrame, a: DataFrame, b: DataFrame, rounder, topk: int
 ) -> DataFrame:
     """Exact cosine + top-k over a candidate-pair set, scale-safe form:
     shuffle equi-joins resolve ids to packed vectors (AQE may still elect
@@ -284,10 +284,9 @@ def _score_candidates(
     # in this full-width stage; at corpus scale the same repartition feeds
     # the a_id shuffle join directly.
     par = cand.sparkSession.sparkContext.defaultParallelism
-    if repartition:
-        cand = cand.repartition(par, "a_id")
     scored = (
-        cand.join(a, "a_id")
+        cand.repartition(par, "a_id")
+        .join(a, "a_id")
         .join(b, "b_id")
         .select(
             "a_id",
@@ -2856,6 +2855,10 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3 ingest slices: still a genuine multi-micro-batch run (cross-batch state
 # is pytest-pinned) at ~2 s fixed micro-batch machinery cost each.
 DEDUP_STREAM_FILES = 3
+# Hex chars of a band signature that pick its state shard (2 -> 256 shards
+# per band). Part of the stream's state layout: a checkpointed stream must
+# keep it for life, since another width re-keys the GroupState groups.
+DEDUP_STREAM_BUCKET_HEX = 2
 
 
 @query(
@@ -2900,15 +2903,6 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_documents_ordered,
     )
 
-    # The shard width is part of the stream's STATE LAYOUT, so a bad value
-    # raises instead of being clamped: clamping would silently re-key the
-    # applyInPandasWithState groups of an existing checkpointed stream.
-    hex_width = _os.environ.get("PSE_STREAM_BUCKET_HEX", "2")
-    if hex_width not in tuple("12345678"):
-        raise ValueError(
-            f"PSE_STREAM_BUCKET_HEX must be an integer in 1..8, got {hex_width!r}"
-        )
-
     docs = stream_documents_ordered(spark, sf_dir, n_files=DEDUP_STREAM_FILES)
     # Each ingest slice is ONE file -> one input partition per micro-batch;
     # without a repartition the per-row MinHash (16 array folds of md5s)
@@ -2949,21 +2943,15 @@ def stream_dedup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded state key: applyInPandasWithState pays a Python call per
         # GROUP per batch, and per-signature keys mean thousands of tiny
         # groups each batch. Signatures shard by their first
-        # PSE_STREAM_BUCKET_HEX hex chars (default 2 → 4×256 groups); the
-        # fold is per-SIGNATURE inside the shard, so ANY shard width
-        # computes identical verdict rows — the knob exists because shard
-        # count is the state-size dial at scale (each shard's sig→min map
-        # must stay executor-sized). r11 measured the coarser 1-hex
-        # default HYPOTHESIS (fewer Python group calls) and it LOST —
-        # 13.0 s vs 22.9 s fresh-stream isolate best-of-3 — so the r10
-        # 2-hex sharding stays; state (de)serialization bytes, not group
-        # call count, dominate this stream's per-batch cost.
-        # Validated to 1..8 above: 0/empty would collapse every signature
-        # into ONE state group with an unbounded sig→min map. The width
-        # must stay fixed for the lifetime of a checkpointed stream
-        # (changing it across restarts re-shards applyInPandasWithState
-        # keys and orphans the existing dedup state).
-        F.substring(F.col("b.band_sig"), 1, int(hex_width)).alias("bucket"),
+        # DEDUP_STREAM_BUCKET_HEX hex chars (4×256 groups); the fold is
+        # per-SIGNATURE inside the shard, so ANY shard width computes
+        # identical verdict rows — shard count is the state-size dial at
+        # scale (each shard's sig→min map must stay executor-sized). r11
+        # measured the coarser 1-hex HYPOTHESIS (fewer Python group calls)
+        # and it LOST — 13.0 s vs 22.9 s fresh-stream isolate best-of-3 —
+        # so the r10 2-hex sharding stays; state (de)serialization bytes,
+        # not group call count, dominate this stream's per-batch cost.
+        F.substring(F.col("b.band_sig"), 1, DEDUP_STREAM_BUCKET_HEX).alias("bucket"),
     )
 
     def update(
@@ -4528,27 +4516,11 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- iterated k-means training on the integer lattice --------------------------
 # K is pinned so the oracle's statically-unrolled k-means CTEs replay the
-# trajectory exactly. The env override exists ONLY for stress.py timing
-# experiments (SCALING.md §14): production IVF re-sizes K with the corpus to
-# keep per-list size bounded — with K fixed, within-list candidate work is
-# Θ(n²/K); with K ∝ n it is Θ(n·L*) linear — and the override lets the
-# harness demonstrate that empirically. Correctness gates never set it (the
-# module reads the env once at import, and both the engine AND the generated
-# oracle text use the same value, so even a set-everywhere run stays
-# self-consistent).
-import os as _os
-
-# The PSE_KM_TRAIN_K timing override is honored ONLY when the stress
-# harness also sets PSE_KM_TIMING=1 (ADVICE r10: a stray env var read
-# unconditionally at import could silently change K during correctness /
-# driver / snapshot runs — self-consistent, but staling every stored plan
-# sha and DRIVER_STATE stamp with no guard). stress.py sets the flag for
-# timing modes only; every correctness entry point sees the pinned 8.
-KM_TRAIN_K = (
-    int(_os.environ["PSE_KM_TRAIN_K"])
-    if _os.environ.get("PSE_KM_TIMING") == "1" and "PSE_KM_TRAIN_K" in _os.environ
-    else 8
-)
+# trajectory exactly; the engine and the generated oracle text read the same
+# constant. Production IVF re-sizes K with the corpus to keep per-list size
+# bounded — with K fixed, within-list candidate work is Θ(n²/K); with K ∝ n
+# it is Θ(n·L*) linear (SCALING.md §14 records the measurement).
+KM_TRAIN_K = 8
 KM_TRAIN_ITERS = 5
 
 

@@ -3,10 +3,13 @@
 Defaults are chosen for correctness-vs-oracle first (UTC session timezone so
 parquet timestamps compare bit-identically with DuckDB's naive reads) and for
 scale second: AQE on (runtime coalescing, skew-join splitting), Arrow enabled
-for the pandas-UDF kernels, and a shuffle-partition default equal to the
-session's task slots (``sparkContext.defaultParallelism``), which a caller
-overrides with ``shuffle_partitions=``, ``SPARK_GRAFT_SHUFFLE`` or a
-``spark.sql.shuffle.partitions`` in ``SPARK_GRAFT_EXTRA_CONFS``.
+for the pandas-UDF kernels, and shuffle partitions equal to the session's
+task slots (``sparkContext.defaultParallelism``).
+
+Three environment variables are read, all here: ``SPARK_GRAFT_CPUS`` (the
+local master's task slots), ``SPARK_GRAFT_DRIVER_MEM`` (driver heap) and
+``SPARK_GRAFT_EXTRA_CONFS`` (launch-time confs applied last, the A/B hook;
+a ``spark.sql.shuffle.partitions`` there wins over the slot count).
 """
 
 from __future__ import annotations
@@ -22,9 +25,9 @@ SHUFFLE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 def positive_int(name: str, raw: str) -> int:
     """``raw`` parsed as a positive integer; ValueError naming ``name`` if not.
 
-    The slot and shuffle knobs are checked here, before a JVM starts: a bad
-    ``SPARK_GRAFT_CPUS`` otherwise surfaces as an opaque master-URL error from
-    the JVM, and a zero ``SPARK_GRAFT_SHUFFLE`` is handed to Spark as is."""
+    The slot knob is checked here, before a JVM starts: a bad
+    ``SPARK_GRAFT_CPUS`` otherwise surfaces as an opaque master-URL error
+    from the JVM."""
     try:
         value = int(raw)
     except ValueError:
@@ -34,23 +37,15 @@ def positive_int(name: str, raw: str) -> int:
     return value
 
 
-def _env_int(name: str) -> int | None:
-    raw = os.environ.get(name)
-    return None if raw is None else positive_int(name, raw)
-
-
 def get_spark(
-    app_name: str = "profitscout-engine-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    app_name: str = "profitscout-engine-spark", master: str | None = None
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) when
-    no active session exists. ``spark.sql.shuffle.partitions`` is, in order of
-    precedence: ``SPARK_GRAFT_EXTRA_CONFS``, ``shuffle_partitions``,
-    ``SPARK_GRAFT_SHUFFLE``, else the started session's task slots
-    (``sparkContext.defaultParallelism``) — the figure every explicit
+    no active session exists. ``spark.sql.shuffle.partitions`` is the started
+    session's task slots (``sparkContext.defaultParallelism``) unless
+    ``SPARK_GRAFT_EXTRA_CONFS`` sets it — the figure every explicit
     ``repartition`` in the engine already uses, so a 4-slot box does not run
     each shuffle stage as 8 waves of near-empty tasks. On a real cluster the
     caller's session wins: if a session is already active we return it
@@ -62,9 +57,8 @@ def get_spark(
         _apply_runtime_confs(active)
         return active
 
-    cpus = _env_int("SPARK_GRAFT_CPUS") or 32
-    if shuffle_partitions is None:
-        shuffle_partitions = _env_int("SPARK_GRAFT_SHUFFLE")
+    raw_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = 32 if raw_cpus is None else positive_int("SPARK_GRAFT_CPUS", raw_cpus)
 
     confs = {
         "spark.sql.adaptive.enabled": "true",
@@ -75,8 +69,6 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
     }
-    if shuffle_partitions is not None:
-        confs[SHUFFLE_PARTITIONS_CONF] = str(shuffle_partitions)
     # A/B experiment hook (round-11 optimization): semicolon-separated
     # key=value pairs applied LAST, so a measurement run can flip one conf
     # without editing source. Production-default confs chosen from those
@@ -101,7 +93,7 @@ def _apply_runtime_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Silence WindowExec's "No Partition Defined" WARN flood: every
     # unpartitioned window in this engine sits over a provably BOUNDED
-    # frame (day spines, <=num_buckets bucket tables, literal lag spines)
+    # frame (day spines, <=NUM_BUCKETS bucket tables, literal lag spines)
     # — enforced structurally by the _UNPART_WINDOW_OK allowlist gate in
     # tests/test_plans.py, which is the correct detector; the blanket WARN
     # only buries real signals in the driver log (VERDICT r6). StringUtils

@@ -39,8 +39,11 @@ from ..session import SHUFFLE_PARTITIONS_CONF
 # makes 8 right here (registers, windows, segments) holds at any corpus size.
 BOUNDED_STATE_PARTITIONS = 8
 
+# Seconds an AvailableNow stream may take before drain() gives up on it.
+DRAIN_TIMEOUT_SEC = 240
 
-def drain(q, timeout_sec: int = 240) -> None:
+
+def drain(q) -> None:
     """Block until an AvailableNow stream finishes, RAISING on timeout.
 
     ``awaitTermination`` returns False (no exception) when the clock runs
@@ -48,13 +51,13 @@ def drain(q, timeout_sec: int = 240) -> None:
     the memory sink would silently consume a partial, nondeterministic
     result. Centralizing the check turns that failure mode into a loud
     error (code-review finding, round 4)."""
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(DRAIN_TIMEOUT_SEC):
         try:
             q.stop()
         finally:
             raise TimeoutError(
                 f"streaming query {q.name or q.id} did not finish within "
-                f"{timeout_sec}s; memory-sink contents would be partial"
+                f"{DRAIN_TIMEOUT_SEC}s; memory-sink contents would be partial"
             )
 
 
@@ -161,11 +164,11 @@ def stream_events(spark: SparkSession, sf_dir: str, with_watermark: str | None =
     return stream
 
 
-def tumbling_counts_stream(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Tumbling-window counts/sums per event_type — the streaming twin of the
-    batch ``tumbling_window_agg`` query."""
+def tumbling_counts_stream(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts/sums per event_type — the streaming twin
+    of the batch ``tumbling_window_agg`` query."""
     return (
-        events.groupBy(F.window("ts", width).alias("win"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -180,16 +183,15 @@ def run_stream_aggregation(
     spark: SparkSession,
     sf_dir: str,
     agg_builder=tumbling_counts_stream,
-    with_watermark: str | None = "1 hour",
 ) -> DataFrame:
-    """Run a streaming aggregation to completion with AvailableNow semantics
-    and return the final result as a static DataFrame (memory sink).
+    """Run a streaming aggregation over the 1-hour-watermarked events stream
+    to completion with AvailableNow semantics and return the final result
+    as a static DataFrame (memory sink).
 
     Complete output mode: every trigger emits full state — matching the
     reference's overwrite-the-day idempotent sink pattern.
     """
-    events = stream_events(spark, sf_dir, with_watermark=with_watermark)
-    return run_to_memory(agg_builder(events), "complete")
+    return run_to_memory(agg_builder(stream_events(spark, sf_dir)), "complete")
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # a stream (not at module level) so streaming/__init__ stays free to import
 # this module without a circular-import ordering constraint.
 
+# Event-time watermark (state retention) of the watermarked operators here.
+WATERMARK = "1 hour"
+
 
 def incremental_user_totals(events: DataFrame) -> DataFrame:
     """Running per-user (n_events, total_value) maintained in GroupState.
@@ -54,14 +57,14 @@ def incremental_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def windowed_counts_append(events: DataFrame, width: str = "1 hour", late: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling counts in APPEND mode: a window only emits
+def windowed_counts_append(events: DataFrame) -> DataFrame:
+    """Watermarked hourly tumbling counts in APPEND mode: a window only emits
     once the watermark passes its end, and events older than the
     watermark are dropped — the streaming form of the reference's
     '>3-days-stale scan is skipped' policy."""
     return (
-        events.withWatermark("ts", late)
-        .groupBy(F.window("ts", width).alias("win"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("window_start"), "n")
     )
@@ -139,24 +142,19 @@ def stream_to_keyed_sink(
     drain(q)
 
 
-def purchase_click_attribution(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    lookback: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def purchase_click_attribution(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """Stream-stream interval join: attribute each purchase to same-user
-    clicks in the preceding ``lookback`` window.
+    clicks in the preceding 30 minutes.
 
     Both sides carry watermarks AND the join condition bounds event time
     on both ends — the two requirements that let the streaming engine
     evict join state instead of buffering both streams forever. State per
-    key is bounded by (watermark + lookback); at 100 TB/day this is the
+    key is bounded by (WATERMARK + 30 minutes); at 100 TB/day this is the
     only join shape that runs indefinitely. Works identically on batch
     DataFrames (same API), which is what the parity test asserts.
     """
     p = (
-        purchases.withWatermark("ts", watermark)
+        purchases.withWatermark("ts", WATERMARK)
         .select(
             F.col("user_id").alias("p_user"),
             F.col("event_id").alias("purchase_id"),
@@ -165,7 +163,7 @@ def purchase_click_attribution(
         )
     )
     c = (
-        clicks.withWatermark("ts", watermark)
+        clicks.withWatermark("ts", WATERMARK)
         .select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -175,7 +173,7 @@ def purchase_click_attribution(
     cond = (
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 minutes"))
     )
     return p.join(c, cond).select(
         F.col("p_user").alias("user_id"),
@@ -187,13 +185,13 @@ def purchase_click_attribution(
     )
 
 
-def streaming_dedup(events: DataFrame, key: str, watermark: str = "1 hour") -> DataFrame:
+def streaming_dedup(events: DataFrame, key: str) -> DataFrame:
     """Streaming exact-dedup: keep the first occurrence of each key,
     with state bounded by the event-time watermark
     (dropDuplicatesWithinWatermark) — the streaming form of the
     training-pipeline exact-dedup pass: infinite streams need bounded
     dedup state, and the watermark is the retention contract."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark([key])
 
 
 def expire_idle_sessions(events: DataFrame, gap: str = "1 hour") -> DataFrame:

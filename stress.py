@@ -25,6 +25,11 @@ sweep.py's driver-style oracle compare (``sweep.oracle_sweep``) over the
 Group-size-dependent accumulations (percentile interpolation, moment
 sums, windowed cumulations, 2dp rounding of float group sums) see 8x
 longer runs there than any shipped fixture exercises.
+
+Both modes run the engine as shipped: no environment variable changes
+what a query computes (k-means K is the constant
+``queries.similarity.KM_TRAIN_K``; a K-scaling experiment edits it on a
+scratch copy, see SCALING.md §14).
 """
 
 from __future__ import annotations
@@ -37,15 +42,6 @@ import time
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# PSE_KM_TRAIN_K is a TIMING-ONLY lever (SCALING.md §14): similarity.py
-# honors it only when PSE_KM_TIMING=1 is also set, and this harness raises
-# the flag only for timing runs — --check mode is a correctness claim and
-# must see the pinned K=8 that every stored oracle / plan sha / DRIVER_STATE
-# stamp was generated under (ADVICE r10). The flag must be set BEFORE the
-# registry import (similarity.py reads the env once at import).
-if "--check" not in sys.argv:
-    os.environ["PSE_KM_TIMING"] = "1"
 
 from profitscout_engine_spark.queries import load_registry
 from profitscout_engine_spark.session import get_spark

@@ -275,7 +275,7 @@ _UNPART_WINDOW_OK = {
     "woe_iv_source",            # |sources| frame
     "token_budget_epochs",      # |sources| frame (x2)
     "trading_day_offsets",      # trading-calendar dim (x3)
-    # range-bucket decompositions: window over <= num_buckets rows
+    # range-bucket decompositions: window over <= NUM_BUCKETS rows
     "spearman_rank_corr",       # two with_avg_rank offset passes
     "systematic_resample",      # with_prefix_sum bucket offsets
 }

@@ -4,6 +4,8 @@ plumbing determinism, and plan-quality gates for the pair generators."""
 
 from __future__ import annotations
 
+import pytest
+
 from profitscout_engine_spark.plans import explain_str
 from profitscout_engine_spark.queries import load_registry
 
@@ -65,25 +67,29 @@ def test_multimodal_roundtrip_and_determinism(spark, sf_dir):
     assert ((m.mean_pixel >= 0) & (m.mean_pixel <= 255)).all()
 
 
-def test_multimodal_decode_rejects_corrupt_payloads(spark):
-    """The decode is a real parser: a payload that isn't P6, or whose
-    pixel plane disagrees with its header, must raise — not silently
-    produce byte stats."""
-    import pytest
+@pytest.mark.parametrize("kernel", ["decode_features", "resize_nearest", "dhash_bands"])
+@pytest.mark.parametrize(
+    "payload, match",
+    [
+        (b"JFIF....", "P6"),
+        (b"P6\n4 4\n255\n" + b"\x01" * 10, "pixel plane"),
+        (b"P6\n4 4\n15\n" + b"\x01" * 48, "maxval"),
+    ],
+    ids=["bad_magic", "short_plane", "maxval_15"],
+)
+def test_multimodal_decode_rejects_corrupt_payloads(spark, kernel, payload, match):
+    """Every image kernel decodes through one real parser: a payload that
+    isn't P6, whose maxval is not 255, or whose pixel plane disagrees with
+    its header must raise — not silently produce byte stats."""
     from pyspark.sql import functions as F
 
-    from profitscout_engine_spark.operators.multimodal import decode_features
+    from profitscout_engine_spark.operators import multimodal
 
-    bad_magic = spark.createDataFrame([(1, b"JFIF....")], "doc_id long, payload binary").withColumn(
+    bad = spark.createDataFrame([(1, payload)], "doc_id long, payload binary").withColumn(
         "meta", F.struct(F.lit("x").alias("format"))
     )
-    with pytest.raises(Exception, match="P6"):
-        decode_features(bad_magic).collect()
-    short_plane = spark.createDataFrame(
-        [(2, b"P6\n4 4\n255\n" + b"\x01" * 10)], "doc_id long, payload binary"
-    ).withColumn("meta", F.struct(F.lit("x").alias("format")))
-    with pytest.raises(Exception, match="pixel plane"):
-        decode_features(short_plane).collect()
+    with pytest.raises(Exception, match=match):
+        getattr(multimodal, kernel)(bad).collect()
 
 
 def test_pair_generators_are_equijoins(spark, sf_dir):
@@ -238,8 +244,6 @@ def test_connected_components_chain_and_forest(spark):
     got = {r.node: r.comp for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1,
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-    import pytest
 
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(edges, max_iters=1)
