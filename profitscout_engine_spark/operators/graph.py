@@ -1,10 +1,13 @@
-"""Graph kernel over a (d1, d2) pair graph: edge symmetrizer, connected
-components (dedup clustering) and one synchronous label-propagation round
-(community detection).
+"""Graph kernel over a (d1, d2) pair graph: the one edge symmetrizer,
+connected components (dedup clustering) and synchronous label propagation
+(community detection), plain rounds and converged.
 
-The near-dup passes emit PAIRS; every graph query walks them as the
-undirected edge list ``symmetric_edges`` builds — each pair once in each
-direction as (src, dst).
+Symmetrizer. The near-dup passes emit undirected PAIRS (d1 < d2); every
+graph query walks them as a directed edge list with each pair once in
+each direction. ``symmetric_edges(pairs, a, b, *payload)`` is the one
+Spark copy of that rule (the caller names the two endpoint columns and
+the pass-through payload, e.g. a similarity), and
+``queries._util.sym_sql`` is its oracle-SQL twin. Neither dedups.
 
 Connected components. A training pipeline needs CLUSTERS — one canonical
 document per connected component of the pair graph, everything else
@@ -25,11 +28,19 @@ adopts the argmax-count label among its neighbors, ties broken by the MIN
 label, and a node with no (frontier) edges keeps its label. Labels are
 doc_ids and counts exact BIGINTs, so the trajectory is fully
 deterministic and replays exactly in an unrolled SQL oracle
-(async/randomized LPA would not be oracle-checkable). Callers run a fixed
-number of rounds, because their oracles unroll exactly that many.
+(async/randomized LPA would not be oracle-checkable). ``converged_lpa``
+is the LPA twin of ``connected_components``: own-id labels, then a FIXED
+``LPA_ROUNDS`` rounds (the oracles unroll exactly that many, so unlike
+CC there is no data-dependent fixpoint test), then a checkpoint.
 
-CLUSTER CAVEAT (ADVICE r11): the CC loop and the LPA consumers cut their
-lineage with ``localCheckpoint``, whose blocks live in non-replicated
+Lineage. Both loops cut their lineage with ``localCheckpoint``: without
+it round N's plan nests every prior round, and that nest rides inside
+every consumer's analyzed tree AND inside the InMemoryRelation child
+that each action re-renders for the SQL-listener event (a consumer of
+the un-checkpointed LPA labels re-planned a 4.9k-line tree per
+execution). The checkpoint materializes the same deterministic rows once.
+
+CLUSTER CAVEAT: ``localCheckpoint`` blocks live in non-replicated
 executor storage — safe on local[*] (the tested config); on a real
 cluster with executor loss / dynamic-allocation decommission, use
 reliable ``checkpoint()`` (with a checkpoint dir) or
@@ -43,12 +54,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def symmetric_edges(pairs: DataFrame) -> DataFrame:
-    """(src, dst) for every (d1, d2) pair in both directions. No dedup:
-    pair lists that may hold both orientations of one edge need a
-    ``.distinct()`` on top."""
-    return pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")).unionAll(
-        pairs.select(F.col("d2").alias("src"), F.col("d1").alias("dst"))
+LPA_ROUNDS = 3
+
+
+def symmetric_edges(pairs: DataFrame, a: str, b: str, *payload: str) -> DataFrame:
+    """(a, b, *payload) for every (d1, d2) pair in both directions, the
+    payload columns carried unchanged. No dedup: pair lists that may hold
+    both orientations of one edge need a ``.distinct()`` on top."""
+    return pairs.select(F.col("d1").alias(a), F.col("d2").alias(b), *payload).unionAll(
+        pairs.select(F.col("d2").alias(a), F.col("d1").alias(b), *payload)
     )
 
 
@@ -104,6 +118,16 @@ def lpa_round(
     )
 
 
+def converged_lpa(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(doc_id, lbl) after ``LPA_ROUNDS`` synchronous rounds over symmetric
+    ``edges`` (src, dst), every ``nodes`` doc_id starting with its own id
+    as label; checkpointed (see Lineage above)."""
+    labels = nodes.select("doc_id", F.col("doc_id").alias("lbl"))
+    for _ in range(LPA_ROUNDS):
+        labels = lpa_round(edges, labels)
+    return labels.localCheckpoint()
+
+
 def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     """(node, component) for every node of the (d1, d2) pair graph
     ``edges``; component = min node id reachable — deterministic, so
@@ -116,7 +140,7 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     # neighborhood join re-reads it, and without the checkpoint each round
     # would re-execute the upstream pair GENERATION (for near-dup input,
     # the whole shingle→minhash→band pipeline) diameter-many times.
-    sym = symmetric_edges(edges).distinct().localCheckpoint()
+    sym = symmetric_edges(edges, "src", "dst").distinct().localCheckpoint()
     labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
         "comp", F.col("node")
     )
@@ -168,9 +192,9 @@ def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
                 "_old",
             )
         )
-        # localCheckpoint: truncate lineage so round N's plan doesn't nest
-        # all prior rounds; also materializes, so the convergence probe
-        # below reads the checkpoint instead of re-running the round.
+        # localCheckpoint (see Lineage above); it also materializes, so the
+        # convergence probe below reads the checkpoint instead of
+        # re-running the round.
         new_labels = new_labels.localCheckpoint()
         changed = new_labels.where(F.col("_old") != F.col("comp")).limit(1).count()
         labels = new_labels.drop("_old")

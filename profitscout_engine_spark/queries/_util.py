@@ -28,6 +28,7 @@ def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 
 _SHARED: dict[tuple[str, str, str], DataFrame] = {}
+_SHARED_VALS: dict[tuple[str, str, str], object] = {}
 # Reentrant: builders COMPOSE shared frames (the MinHash band chain builds on
 # the distinct-shingle frame, IVF ranking on the packed vectors), so a builder
 # running under the lock may call shared() again on the same thread. A plain
@@ -36,8 +37,24 @@ _SHARED: dict[tuple[str, str, str], DataFrame] = {}
 _SHARED_LOCK = threading.RLock()
 
 
+def _evict(live_app: str | None) -> None:
+    """Drop every entry of both memos not keyed to ``live_app`` (every entry
+    for None), releasing each dropped frame's cache registration — so a
+    long-lived driver process that restarts its SparkSession doesn't
+    accumulate dead plan objects. Call under ``_SHARED_LOCK``."""
+    for memo in (_SHARED, _SHARED_VALS):
+        for k in [k for k in memo if k[0] != live_app]:
+            v = memo.pop(k)
+            if isinstance(v, DataFrame):
+                try:
+                    v.unpersist()
+                except Exception:
+                    pass  # session gone or never persisted — nothing to release
+
+
 def reset_shared() -> None:
-    """Drop EVERY session-shared frame (and its cache registration).
+    """Drop EVERY session-shared frame and value (and the frames' cache
+    registrations).
 
     For snapshot/test isolation: plans_snapshot.py captures each query's
     plan from a pristine state. clearCache() alone is not enough — the
@@ -49,25 +66,7 @@ def reset_shared() -> None:
     source/oracle changes). After reset, a capture rebuilds its shared
     chain in the query's own deterministic build order."""
     with _SHARED_LOCK:
-        _SHARED_VALS.clear()
-        for k in list(_SHARED):
-            df = _SHARED.pop(k)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session gone or never persisted — nothing to release
-
-
-def _evict_stale(app_id: str) -> None:
-    """Drop (and unpersist) entries from sessions other than the live one,
-    so a long-lived driver process that restarts its SparkSession doesn't
-    accumulate dead plan objects and cache registrations."""
-    for k in [k for k in _SHARED if k[0] != app_id]:
-        df = _SHARED.pop(k)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # the owning session is gone; nothing to release
+        _evict(None)
 
 
 def shared(
@@ -88,7 +87,7 @@ def shared(
     app_id = spark.sparkContext.applicationId
     k = (app_id, sf_dir, key)
     with _SHARED_LOCK:
-        _evict_stale(app_id)
+        _evict(app_id)
         df = _SHARED.get(k)
         if df is None:
             df = builder()
@@ -107,9 +106,6 @@ def shared(
     return df
 
 
-_SHARED_VALS: dict[tuple[str, str, str], object] = {}
-
-
 def shared_value(
     spark: SparkSession, sf_dir: str, key: str, builder: Callable[[], object]
 ) -> object:
@@ -122,11 +118,24 @@ def shared_value(
     app_id = spark.sparkContext.applicationId
     k = (app_id, sf_dir, key)
     with _SHARED_LOCK:
-        for stale in [sk for sk in _SHARED_VALS if sk[0] != app_id]:
-            _SHARED_VALS.pop(stale)
+        _evict(app_id)
         if k not in _SHARED_VALS:
             _SHARED_VALS[k] = builder()
         return _SHARED_VALS[k]
+
+
+def sym_sql(rel: str, a: str, b: str, *payload: str) -> str:
+    """Oracle-SQL twin of ``operators.graph.symmetric_edges``: the body of a
+    CTE holding every (d1, d2) row of ``rel`` (a FROM clause, filter
+    allowed) in both directions as (a, b, *payload). No dedup. The
+    continuation lines carry the 8-space indent of the CTE bodies it is
+    spliced into, so an oracle's text stays what it was when written out."""
+    cols = "".join(f", {c}" for c in payload)
+    return (
+        f"SELECT d1 AS {a}, d2 AS {b}{cols} FROM {rel}\n"
+        "        UNION ALL\n"
+        f"        SELECT d2 AS {a}, d1 AS {b}{cols} FROM {rel}"
+    )
 
 
 def sr(expr: str, n: int) -> str:

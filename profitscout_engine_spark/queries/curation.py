@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..exprs import r2, r4, r6
+from ..operators.graph import symmetric_edges
 from ..operators.text import tokens
 from . import query
 from ._util import t
@@ -950,9 +951,7 @@ def contamination_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     pairs = _mh_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b")).unionByName(
-        pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b"))
-    )
+    edges = symmetric_edges(pairs, "a", "b")
     levels = [seeds.select("doc_id", F.lit(0).alias("hop"))]
     frontier = seeds
     for h in range(1, SPREAD_MAX_HOP + 1):

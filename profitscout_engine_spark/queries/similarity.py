@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 from ..exprs import r4, r6, stable_round
 from ..operators import text as tx
 from ..operators import similarity as sim
-from ..operators.graph import lpa_round, symmetric_edges
+from ..operators.graph import LPA_ROUNDS, converged_lpa, lpa_round, symmetric_edges
 from . import query
-from ._util import fan_out, shared, shared_value, t
+from ._util import fan_out, shared, shared_value, sym_sql, t
 
 TOPK = 5
 LSH_TOPK = 3
@@ -86,7 +86,7 @@ def _mh_edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot change); both PageRank queries read this one cached frame."""
 
     def build() -> DataFrame:
-        edges = symmetric_edges(_mh_pairs(spark, sf_dir))
+        edges = symmetric_edges(_mh_pairs(spark, sf_dir), "src", "dst")
         deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
         return edges.join(deg, "src")
 
@@ -927,11 +927,7 @@ def cosine_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction reuses the same sim instead of a second scoring pass.
     """
     s = _lsh_scored(spark, sf_dir)
-    directed = s.select(
-        F.col("d1").alias("a_id"), F.col("d2").alias("b_id"), "sim_raw"
-    ).unionByName(
-        s.select(F.col("d2").alias("a_id"), F.col("d1").alias("b_id"), "sim_raw")
-    )
+    directed = symmetric_edges(s, "a_id", "b_id", "sim_raw")
     scored = directed.select("a_id", "b_id", r6(F.col("sim_raw")).alias("sim"))
     w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("b_id"))
     return (
@@ -1140,9 +1136,7 @@ def _semantic_contamination_oracle() -> str:
         FROM cand c JOIN e ea ON ea.vec_id = c.d1 JOIN e eb ON eb.vec_id = c.d2
     ),
     directed AS (
-        SELECT d1 AS a_id, d2 AS b_id, sim FROM sims
-        UNION ALL
-        SELECT d2 AS a_id, d1 AS b_id, sim FROM sims
+        {sym_sql("sims", "a_id", "b_id", "sim")}
     ),
     tagged AS (SELECT vec_id, label,
                       substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) AS h
@@ -1185,11 +1179,7 @@ def semantic_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed join and two bounded aggregations. Per label: test-vector
     count, contaminated count, and the worst (max) offending similarity."""
     s = _lsh_scored(spark, sf_dir)
-    directed = s.select(
-        F.col("d1").alias("a_id"), F.col("d2").alias("b_id"), "sim_raw"
-    ).unionAll(
-        s.select(F.col("d2").alias("a_id"), F.col("d1").alias("b_id"), "sim_raw")
-    )
+    directed = symmetric_edges(s, "a_id", "b_id", "sim_raw")
     vecs = _vecs(spark, sf_dir).select(
         "vec_id",
         "label",
@@ -1653,9 +1643,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
     ),
     edges AS (
-        SELECT d1 AS src, d2 AS dst FROM pairs0
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM pairs0
+        {sym_sql("pairs0", "src", "dst")}
     ),
     deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -2253,11 +2241,7 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(counts.alias("cb"), F.col("d2") == F.col("cb.doc_id"))
         .select("d1", "d2", r4(j).alias("s"))
     )
-    lex_directed = undirected.select(
-        F.col("d1").alias("q_id"), F.col("d2").alias("n_id"), "s"
-    ).unionByName(
-        undirected.select(F.col("d2").alias("q_id"), F.col("d1").alias("n_id"), "s")
-    )
+    lex_directed = symmetric_edges(undirected, "q_id", "n_id", "s")
     wl = Window.partitionBy("q_id").orderBy(F.desc("s"), F.asc("n_id"))
     lex = (
         lex_directed.withColumn("rank", F.row_number().over(wl))
@@ -2265,11 +2249,7 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "n_id", "rank")
     )
     scored = _lsh_scored(spark, sf_dir)
-    den_directed = scored.select(
-        F.col("d1").alias("q_id"), F.col("d2").alias("n_id"), "sim_raw"
-    ).unionByName(
-        scored.select(F.col("d2").alias("q_id"), F.col("d1").alias("n_id"), "sim_raw")
-    )
+    den_directed = symmetric_edges(scored, "q_id", "n_id", "sim_raw")
     wd = Window.partitionBy("q_id").orderBy(
         F.desc(r6(F.col("sim_raw"))), F.asc("n_id")
     )
@@ -2780,9 +2760,7 @@ def _kcore_oracle() -> str:
         GROUP BY 1, 2
     ),
     ed0 AS MATERIALIZED (
-        SELECT d1 AS src, d2 AS dst FROM pairs0
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM pairs0
+        {sym_sql("pairs0", "src", "dst")}
     ),
     {', '.join(ctes)},
     degf AS (SELECT src AS node, COUNT(*) AS deg FROM {prev} GROUP BY 1)
@@ -2813,7 +2791,7 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would push ~1k-row edge lists through 64-task shuffle rounds — the
     # peel loop is scheduling-bound, not data-bound (same rule as the
     # dendrogram sweep).
-    ed = symmetric_edges(_mh_pairs(spark, sf_dir)).coalesce(8)
+    ed = symmetric_edges(_mh_pairs(spark, sf_dir), "src", "dst").coalesce(8)
     deg0 = ed.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg"))
     survs = []
     cur = ed
@@ -3050,11 +3028,7 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus² pass) and adds only a label filter and a rank window."""
     labels = _vecs(spark, sf_dir).select("vec_id", "label")
     s = _lsh_scored(spark, sf_dir)
-    directed = s.select(
-        F.col("d1").alias("a_id"), F.col("d2").alias("b_id"), "sim_raw"
-    ).unionByName(
-        s.select(F.col("d2").alias("a_id"), F.col("d1").alias("b_id"), "sim_raw")
-    )
+    directed = symmetric_edges(s, "a_id", "b_id", "sim_raw")
     la = labels.select(F.col("vec_id").alias("a_id"), F.col("label").alias("a_label"))
     lb = labels.select(F.col("vec_id").alias("b_id"), F.col("label").alias("b_label"))
     scored = (
@@ -3541,11 +3515,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = shared(
         spark, sf_dir, "modularity_cc", lambda: connected_components(strong)
     )
-    nodes = (
-        base.select(F.col("d1").alias("node"))
-        .unionByName(base.select(F.col("d2").alias("node")))
-        .distinct()
-    )
+    nodes = symmetric_edges(base, "node", "nbr").select("node").distinct()
     comp = nodes.join(cc, "node", "left").select(
         "node", F.coalesce("comp", F.col("node")).alias("comp")
     )
@@ -3745,7 +3715,9 @@ def _dbscan_oracle() -> str:
         JOIN counts cb ON cb.doc_id = d2
         WHERE FLOOR((c * 1.0 / (ca.n + cb.n - c)) * 1e4 + 0.5) / 1e4 >= {eps}
     ),
-    nbr AS (SELECT d1 AS v, d2 AS u FROM edges UNION ALL SELECT d2, d1 FROM edges),
+    nbr AS (
+        {sym_sql("edges", "v", "u")}
+    ),
     degs AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS n_neighbors FROM nbr GROUP BY v),
     core AS (SELECT v FROM degs WHERE n_neighbors >= {mp}),
     border AS (
@@ -3783,9 +3755,7 @@ def dbscan_core_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     scored = _jaccard_scored(spark, sf_dir)
     edges = scored.where(F.col("j") >= DBSCAN_EPS_J).select("d1", "d2")
-    nbr = edges.select(F.col("d1").alias("v"), F.col("d2").alias("u")).unionByName(
-        edges.select(F.col("d2").alias("v"), F.col("d1").alias("u"))
-    )
+    nbr = symmetric_edges(edges, "v", "u")
     degs = nbr.groupBy("v").agg(F.count("*").cast("long").alias("n_neighbors"))
     core = degs.where(F.col("n_neighbors") >= DBSCAN_MINPTS).select("v")
     border = (
@@ -3840,9 +3810,7 @@ def _knn_sparsify_oracle() -> str:
         JOIN counts cb ON cb.doc_id = d2
     ),
     directed AS (
-        SELECT d1 AS v, d2 AS u, j FROM scored
-        UNION ALL
-        SELECT d2 AS v, d1 AS u, j FROM scored
+        {sym_sql("scored", "v", "u", "j")}
     ),
     kept AS (
         SELECT v, u, j FROM (
@@ -3887,9 +3855,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         s = _jaccard_scored(spark, sf_dir)
-        directed = s.select(
-            F.col("d1").alias("v"), F.col("d2").alias("u"), "j"
-        ).unionByName(s.select(F.col("d2").alias("v"), F.col("d1").alias("u"), "j"))
+        directed = symmetric_edges(s, "v", "u", "j")
         w = Window.partitionBy("v").orderBy(F.desc("j"), F.asc("u"))
         kept = (
             directed.withColumn("rn", F.row_number().over(w))
@@ -3925,9 +3891,7 @@ def _two_hop_oracle() -> str:
         JOIN counts cb ON cb.doc_id = d2
     ),
     directed AS (
-        SELECT d1 AS v, d2 AS u, j FROM scored
-        UNION ALL
-        SELECT d2 AS v, d1 AS u, j FROM scored
+        {sym_sql("scored", "v", "u", "j")}
     ),
     kept AS (
         SELECT v, u, j FROM (
@@ -3939,9 +3903,7 @@ def _two_hop_oracle() -> str:
     und AS (SELECT LEAST(v, u) AS d1, GREATEST(v, u) AS d2, j FROM kept),
     edges AS (SELECT d1, d2, COUNT(*) = 2 AS mutual FROM und GROUP BY 1, 2),
     mutual_sym AS (
-        SELECT d1 AS a, d2 AS b FROM edges WHERE mutual
-        UNION ALL
-        SELECT d2 AS a, d1 AS b FROM edges WHERE mutual
+        {sym_sql("edges WHERE mutual", "a", "b")}
     ),
     hops AS (
         SELECT LEAST(x.a, y.b) AS d1, GREATEST(x.a, y.b) AS d2,
@@ -3983,9 +3945,7 @@ def two_hop_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge frame."""
     edges = _knn_edges(spark, sf_dir)
     mutual = edges.where("mutual")
-    ms = mutual.select(F.col("d1").alias("a"), F.col("d2").alias("b")).unionByName(
-        mutual.select(F.col("d2").alias("a"), F.col("d1").alias("b"))
-    )
+    ms = symmetric_edges(mutual, "a", "b")
     hops = (
         ms.alias("x")
         .join(ms.alias("y"), (F.col("y.a") == F.col("x.b")) & (F.col("x.a") != F.col("y.b")))
@@ -5093,9 +5053,7 @@ def _pagerank_power_oracle() -> str:
         GROUP BY 1, 2
     ),
     edges AS (
-        SELECT d1 AS src, d2 AS dst FROM pairs0
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM pairs0
+        {sym_sql("pairs0", "src", "dst")}
     ),
     deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
@@ -5483,9 +5441,6 @@ def gram_topk_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- synchronous label propagation over the candidate graph --------------------
-LPA_ROUNDS = 3
-
-
 def _lpa_round_ctes(p: int, q: int, edges: str, frontier: str | None = None) -> str:
     """Oracle twin of ``operators.graph.lpa_round``: CTEs c{q} (neighbor
     label counts of l{p} over the symmetric ``edges`` CTE, restricted to
@@ -5527,9 +5482,7 @@ def _label_prop_oracle() -> str:
         GROUP BY 1, 2
     ),
     edges AS (
-        SELECT d1 AS src, d2 AS dst FROM pairs0
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM pairs0
+        {sym_sql("pairs0", "src", "dst")}
     ),
     l0 AS (SELECT doc_id, doc_id AS lbl FROM documents)"""]
     for it in range(1, LPA_ROUNDS + 1):
@@ -5569,19 +5522,9 @@ def label_propagation_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized-view pattern every other derived corpus frame uses."""
 
     def build() -> DataFrame:
-        edges = symmetric_edges(_mh_pairs(spark, sf_dir))
-        labels = _docs(spark, sf_dir).select("doc_id", F.col("doc_id").alias("lbl"))
-        for _ in range(LPA_ROUNDS):
-            labels = lpa_round(edges, labels)
-        # localCheckpoint (r11): without it the {LPA_ROUNDS}-round nest rides
-        # inside every consumer's tree AND inside the InMemoryRelation child
-        # that each action re-renders for the SQL-listener event (the
-        # plan-string finding) — community_top_terms alone re-planned a
-        # 4.9k-line tree per execution. Same deterministic rows,
-        # materialized once (CLUSTER CAVEAT: operators/graph.py).
-        return labels.select(
-            "doc_id", F.col("lbl").alias("community")
-        ).localCheckpoint()
+        edges = symmetric_edges(_mh_pairs(spark, sf_dir), "src", "dst")
+        labels = converged_lpa(edges, _docs(spark, sf_dir))
+        return labels.select("doc_id", F.col("lbl").alias("community"))
 
     return shared(spark, sf_dir, "lpa_communities", build)
 
@@ -5607,14 +5550,10 @@ def _incremental_lpa_oracle() -> str:
         FROM pairs0
     ),
     old_edges AS (
-        SELECT d1 AS src, d2 AS dst FROM tagged WHERE NOT is_new
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM tagged WHERE NOT is_new
+        {sym_sql("tagged WHERE NOT is_new", "src", "dst")}
     ),
     all_edges AS (
-        SELECT d1 AS src, d2 AS dst FROM tagged
-        UNION ALL
-        SELECT d2 AS src, d1 AS dst FROM tagged
+        {sym_sql("tagged", "src", "dst")}
     ),
     l0 AS (SELECT doc_id, doc_id AS lbl FROM documents)"""]
     for it in range(1, base + 1):
@@ -5692,23 +5631,15 @@ def incremental_lpa_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    old_edges = symmetric_edges(tagged.where(~F.col("is_new")))
-    all_edges = symmetric_edges(tagged)
+    old_edges = symmetric_edges(tagged.where(~F.col("is_new")), "src", "dst")
+    all_edges = symmetric_edges(tagged, "src", "dst")
 
-    labels = _docs(spark, sf_dir).select("doc_id", F.col("doc_id").alias("lbl"))
-    for _ in range(LPA_ROUNDS):
-        labels = lpa_round(old_edges, labels)
     # the converged OLD-graph labels feed every incremental round AND the
-    # final changed-flag join — share the subtree once per session.
-    # localCheckpoint (r11): the {LPA_ROUNDS}-round nest otherwise rides
-    # along INSIDE every consumer's analyzed tree (each incremental round,
-    # the final join, and the InMemoryRelation child that every action
-    # re-renders for the SQL-listener event) — cutting the lineage here is
-    # what turned the cached-everything re-execution from ~4 s of driver
-    # plan-rendering into real work only (same rows: the checkpoint
-    # materializes the identical deterministic computation once).
-    # CLUSTER CAVEAT: operators/graph.py.
-    base = shared(spark, sf_dir, "inc_lpa_base", lambda: labels.localCheckpoint())
+    # final changed-flag join — share them once per session.
+    base = shared(
+        spark, sf_dir, "inc_lpa_base",
+        lambda: converged_lpa(old_edges, _docs(spark, sf_dir)),
+    )
     frontier = (
         tagged.where(F.col("is_new"))
         .select(F.col("d1").alias("doc_id"))
@@ -6198,11 +6129,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     one top-N window + one bounded aggregation on the candidate set,
     and the final join keys on vector ids — plain shuffle equi-joins."""
     s = _lsh_scored(spark, sf_dir)
-    directed = s.select(
-        F.col("d1").alias("a_id"), F.col("d2").alias("b_id"), "sim_raw"
-    ).unionByName(
-        s.select(F.col("d2").alias("a_id"), F.col("d1").alias("b_id"), "sim_raw")
-    )
+    directed = symmetric_edges(s, "a_id", "b_id", "sim_raw")
     crossed = directed.where(
         (F.col("a_id") % 2 != F.col("b_id") % 2)
     ).select(

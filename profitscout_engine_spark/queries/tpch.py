@@ -30,18 +30,25 @@ from ._util import t
 @query(
     "q1_pricing_summary",
     oracle="""
+    WITH li AS (
+        SELECT l_returnflag, l_linestatus, l_quantity,
+               CAST(l_extendedprice AS DECIMAL(12, 2)) AS price,
+               CAST(l_discount AS DECIMAL(4, 2)) AS disc,
+               CAST(l_tax AS DECIMAL(4, 2)) AS tax
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
+    )
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-           ROUND(SUM(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)), 2)
+           CAST(SUM(price) AS DOUBLE) AS sum_base_price,
+           CAST(ROUND(SUM(price * (1 - disc)), 2) AS DOUBLE) AS sum_disc_price,
+           CAST(ROUND(SUM(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE)
                AS sum_charge,
            ROUND(SUM(l_quantity) / COUNT(*), 4) AS avg_qty,
-           ROUND(SUM(l_extendedprice) / COUNT(*), 4) AS avg_price,
-           ROUND(SUM(l_discount) / COUNT(*), 4) AS avg_disc,
+           ROUND(CAST(SUM(price) AS DOUBLE) / COUNT(*), 4) AS avg_price,
+           ROUND(CAST(SUM(disc) AS DOUBLE) / COUNT(*), 4) AS avg_disc,
            COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
+    FROM li
     GROUP BY l_returnflag, l_linestatus
     """,
     tags=("tpch-q1", "A1", "P1"),
@@ -51,19 +58,27 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. The date filter pushes to the scan; one partial→final hash
     aggregation over a 6-group key; averages are SUM/COUNT so both
     engines evaluate the identical division. The canonical 'does the
-    engine do scan-heavy rollups right' query."""
+    engine do scan-heavy rollups right' query.
+
+    Money is exact: price, discount and tax are 2dp values, so every
+    money sum accumulates in DECIMAL (no summation-order dependence in
+    the last bit of a DOUBLE sum) and is rounded half-up there before
+    the cast back to DOUBLE."""
     li = t(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("2001-06-01 00:00:00").cast("timestamp")
     )
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = F.col("l_discount").cast("decimal(4,2)")
+    disc_price = price * (1 - disc)
+    charge = disc_price * (1 + F.col("l_tax").cast("decimal(4,2)"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum(F.col("l_quantity").cast("long")).cast("long").alias("sum_qty"),
-        r2(F.sum("l_extendedprice")).alias("sum_base_price"),
-        r2(F.sum(disc_price)).alias("sum_disc_price"),
-        r2(F.sum(disc_price * (F.lit(1.0) + F.col("l_tax")))).alias("sum_charge"),
+        F.sum(price).cast("double").alias("sum_base_price"),
+        F.round(F.sum(disc_price), 2).cast("double").alias("sum_disc_price"),
+        F.round(F.sum(charge), 2).cast("double").alias("sum_charge"),
         r4(F.sum("l_quantity") / F.count("*")).alias("avg_qty"),
-        r4(F.sum("l_extendedprice") / F.count("*")).alias("avg_price"),
-        r4(F.sum("l_discount") / F.count("*")).alias("avg_disc"),
+        r4(F.sum(price).cast("double") / F.count("*")).alias("avg_price"),
+        r4(F.sum(disc).cast("double") / F.count("*")).alias("avg_disc"),
         F.count("*").alias("count_order"),
     )
 

@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from profitscout_engine_spark.queries import load_registry
-from profitscout_engine_spark.queries._util import shared
+from profitscout_engine_spark.queries import _util
+from profitscout_engine_spark.queries._util import reset_shared, shared, shared_value
 
 REGISTRY = load_registry()
 
@@ -49,6 +50,32 @@ def test_shared_heals_after_clear_cache(spark, sf_dir):
     assert df2 is df  # same frame, NOT rebuilt from the (changed) builder
     assert _live(df2)  # re-persisted
     assert df2.count() == 5
+
+
+def test_memo_eviction_covers_frames_and_values(spark, sf_dir):
+    """An entry keyed to another applicationId (a restarted session's) is
+    dropped from BOTH memos — its frame unpersisted — by the next
+    ``shared`` or ``shared_value`` call; live entries survive that call;
+    ``reset_shared`` empties both memos."""
+    live = shared(spark, sf_dir, "test_evict_live", lambda: spark.range(4))
+    assert shared_value(spark, sf_dir, "test_evict_val", lambda: 7) == 7
+    stale = ("another-application", sf_dir, "test_evict_stale")
+    for call in (
+        lambda: shared(spark, sf_dir, "test_evict_live", lambda: spark.range(99)),
+        lambda: shared_value(spark, sf_dir, "test_evict_val", lambda: 8),
+    ):
+        stale_df = spark.range(3).persist()
+        _util._SHARED[stale] = stale_df
+        _util._SHARED_VALS[stale] = 1
+        call()
+        assert stale not in _util._SHARED and stale not in _util._SHARED_VALS
+        assert not _live(stale_df)
+        assert shared(spark, sf_dir, "test_evict_live", lambda: spark.range(99)) is live
+        assert shared_value(spark, sf_dir, "test_evict_val", lambda: 8) == 7
+
+    reset_shared()
+    assert not _util._SHARED and not _util._SHARED_VALS
+    assert not _live(live)
 
 
 def test_dedup_queries_consistent_after_clear_cache(spark, sf_dir):

@@ -257,7 +257,9 @@ def test_lpa_round_argmax_tiebreak_isolated_and_frontier(spark):
     from profitscout_engine_spark.operators.graph import lpa_round, symmetric_edges
 
     edges = symmetric_edges(
-        spark.createDataFrame([(1, 2), (1, 3), (1, 4), (4, 5)], "d1 long, d2 long")
+        spark.createDataFrame([(1, 2), (1, 3), (1, 4), (4, 5)], "d1 long, d2 long"),
+        "src",
+        "dst",
     )
     labels = spark.createDataFrame(
         [(1, 1), (2, 7), (3, 7), (4, 5), (5, 5), (6, 6)], "doc_id long, lbl long"
@@ -269,6 +271,126 @@ def test_lpa_round_argmax_tiebreak_isolated_and_frontier(spark):
     assert step() == {1: 7, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6}
     frontier = spark.createDataFrame([(1,), (4,)], "doc_id long")
     assert step(frontier) == {1: 7, 2: 7, 3: 7, 4: 1, 5: 5, 6: 6}
+
+
+def test_converged_lpa_cuts_lineage_and_equals_manual_rounds(spark):
+    """``converged_lpa`` is own-id labels + LPA_ROUNDS ``lpa_round`` calls,
+    checkpointed: its plan holds no Join (the rounds' lineage is cut) and
+    its rows equal the hand-unrolled rounds on the graph above."""
+    from pyspark.sql import functions as F
+
+    from profitscout_engine_spark.operators.graph import (
+        LPA_ROUNDS,
+        converged_lpa,
+        lpa_round,
+        symmetric_edges,
+    )
+
+    edges = symmetric_edges(
+        spark.createDataFrame([(1, 2), (1, 3), (1, 4), (4, 5)], "d1 long, d2 long"),
+        "src",
+        "dst",
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
+    got = converged_lpa(edges, nodes)
+    assert "Join" not in explain_str(got)
+
+    labels = nodes.select("doc_id", F.col("doc_id").alias("lbl"))
+    for _ in range(LPA_ROUNDS):
+        labels = lpa_round(edges, labels)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, labels.collect()))
+
+
+def test_symmetric_edges_renames_carries_payload_and_matches_sql_twin(spark):
+    """Both orientations under the caller's column names, the payload
+    unchanged, no dedup (the reversed (2, 1) pair stays a separate edge
+    pair) — and the oracle twin ``sym_sql`` returns the same rows."""
+    import duckdb
+    import pandas as pd
+
+    from profitscout_engine_spark.operators.graph import symmetric_edges
+    from profitscout_engine_spark.queries._util import sym_sql
+
+    rows = [(1, 2, 0.5), (1, 3, 0.25), (2, 1, 0.75)]
+    want = sorted(
+        [(1, 2, 0.5), (2, 1, 0.5), (1, 3, 0.25), (3, 1, 0.25), (2, 1, 0.75), (1, 2, 0.75)]
+    )
+    pairs = spark.createDataFrame(rows, "d1 long, d2 long, sim double")
+    got = symmetric_edges(pairs, "a_id", "b_id", "sim")
+    assert got.columns == ["a_id", "b_id", "sim"]
+    assert sorted(map(tuple, got.collect())) == want
+
+    con = duckdb.connect()
+    con.register("p", pd.DataFrame(rows, columns=["d1", "d2", "sim"]))
+    assert sorted(con.sql(sym_sql("p", "a_id", "b_id", "sim")).fetchall()) == want
+    con.close()
+
+
+def _union_calls_swapping_d1_d2(tree) -> list[int]:
+    """Line numbers of union calls with a ``select`` operand that aliases
+    both F.col("d1") and F.col("d2") — a hand-rolled pair symmetrizer.
+    (One-column endpoint unions, d1 AS node ∪ d2 AS node, are a projection
+    of the rule, not a copy of it.)"""
+    import ast
+
+    def aliased(select: ast.Call) -> set[str]:
+        return {
+            a.func.value.args[0].value
+            for a in select.args
+            if isinstance(a, ast.Call)
+            and isinstance(a.func, ast.Attribute)
+            and a.func.attr == "alias"
+            and isinstance(a.func.value, ast.Call)
+            and isinstance(a.func.value.func, ast.Attribute)
+            and a.func.value.func.attr == "col"
+            and a.func.value.args
+            and isinstance(a.func.value.args[0], ast.Constant)
+        }
+
+    def calls(node, attrs) -> list[ast.Call]:
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in attrs
+        ]
+
+    return [
+        u.lineno
+        for u in calls(tree, ("union", "unionAll", "unionByName"))
+        if any({"d1", "d2"} <= aliased(s) for s in calls(u, ("select",)))
+    ]
+
+
+def test_only_graph_module_symmetrizes_pairs():
+    """One copy of the (d1, d2) → both-directions rule per engine: the
+    Spark kernel ``operators.graph.symmetric_edges`` and its SQL twin
+    ``queries._util.sym_sql``. Any other module that swaps d1/d2 inside a
+    union (Spark) or writes ``SELECT d2 AS …, d1 AS …`` (oracle SQL)
+    re-derives the orientation and fails here."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import profitscout_engine_spark
+
+    pkg = Path(profitscout_engine_spark.__file__).parent
+    swap_sql = re.compile(r"SELECT\s+d2\s+AS\s+\w+\s*,\s*d1\s+AS\b")
+    # the detectors see the kernel's own swap and the old oracle form
+    assert _union_calls_swapping_d1_d2(ast.parse((pkg / "operators/graph.py").read_text()))
+    assert swap_sql.search("SELECT d1 AS src, d2 AS dst FROM p UNION ALL SELECT d2 AS src, d1 AS dst")
+    spark_hits, sql_hits = {}, {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        text = path.read_text()
+        lines = _union_calls_swapping_d1_d2(ast.parse(text))
+        if lines and rel != "operators/graph.py":
+            spark_hits[rel] = lines
+        if rel != "queries/_util.py" and swap_sql.search(text):
+            sql_hits[rel] = swap_sql.findall(text)
+    assert not spark_hits, spark_hits
+    assert not sql_hits, sql_hits
 
 
 def test_bpe_maximal_munch_on_adversarial_words(spark):
